@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.GraftFunctions
 import graft.operators.{GraphOps, Vertices}
@@ -332,45 +333,54 @@ object EscoAnalytics {
         s"no skill with preferredLabel '$label'"))
       .getLong(0)
 
-  /** Undirected shortest path length between two skills by label (G2,
-    * `analysis_queries.md:138-141`). */
-  def shortestPathBetweenSkills(
-      wh: EscoWarehouse, label1: String, label2: String): Int = {
-    val nodes = wh.allNodes.select(col("conceptUri").as("k"))
-    val dict = Vertices.dictionary(nodes, "k")
-    val edges = wh.allEdges
-      .join(dict.withColumnRenamed("key", "srcUri"), Seq("srcUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "dstUri"), Seq("dstUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
-    def idOf(label: String): Long = idOfSkillLabel(wh, dict, label)
-    GraphOps.shortestPathLength(edges, idOf(label1), idOf(label2), maxDepth = 15)
+  /** Runs `f` over the shortest-path graph, built once per call: the URI
+    * dictionary (materialized) and the id-mapped edges over all node/edge
+    * types, symmetrized, partitioned on `src` and persisted for the call
+    * ([[GraphOps.shortestPath]]'s `edgesPrepared` contract). Every BFS
+    * level then probes them instead of re-deriving the eight edge tables,
+    * their union and both dictionary joins, and its join exchanges only
+    * the frontier: the cached scan keeps the `src` partitioning, which a
+    * checkpoint would not. */
+  private def withPathGraph[T](wh: EscoWarehouse)(f: (DataFrame, DataFrame) => T): T = {
+    val dict = Vertices.dictionary(wh.allNodes.select(col("conceptUri").as("k")), "k")
+      .localCheckpoint(true)
+    val e = idEdges(wh, dict)
+    val undirected = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try f(dict, undirected)
+    finally undirected.unpersist(blocking = false)
   }
+
+  /** Undirected shortest path length between two skills by label (G2,
+    * `analysis_queries.md:138-141`); -1 when they are not connected
+    * within 15 hops. */
+  def shortestPathBetweenSkills(
+      wh: EscoWarehouse, label1: String, label2: String): Int =
+    withPathGraph(wh) { (dict, edges) =>
+      def idOf(label: String): Long = idOfSkillLabel(wh, dict, label)
+      GraphOps.shortestPath(edges, idOf(label1), idOf(label2), maxDepth = 15,
+        edgesPrepared = true).size - 1
+    }
 
   /** Full G2 semantics: the shortest path's node labels in order (the
     * Cypher query returns the path object; `analysis_queries.md:138-141`). */
   def shortestPathNodes(
-      wh: EscoWarehouse, label1: String, label2: String): Seq[String] = {
-    val nodes = wh.allNodes.select(col("conceptUri").as("k"), col("preferredLabel"))
-    val dict = Vertices.dictionary(nodes.select(col("k")), "k")
-    val edges = wh.allEdges
-      .join(dict.withColumnRenamed("key", "srcUri"), Seq("srcUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "dstUri"), Seq("dstUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
-    def idOf(label: String): Long = idOfSkillLabel(wh, dict, label)
-    val ids = GraphOps.shortestPath(edges, idOf(label1), idOf(label2), maxDepth = 15)
-    if (ids.isEmpty) Nil
-    else {
-      val labelById = dict.join(nodes, dict("key") === nodes("k"))
-        .filter(col("id").isin(ids: _*))
-        .select(col("id"), col("preferredLabel"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      ids.map(labelById)
+      wh: EscoWarehouse, label1: String, label2: String): Seq[String] =
+    withPathGraph(wh) { (dict, edges) =>
+      def idOf(label: String): Long = idOfSkillLabel(wh, dict, label)
+      val ids = GraphOps.shortestPath(edges, idOf(label1), idOf(label2),
+        maxDepth = 15, edgesPrepared = true)
+      if (ids.isEmpty) Nil
+      else {
+        val nodes = wh.allNodes.select(col("conceptUri").as("k"), col("preferredLabel"))
+        val labelById = dict.join(nodes, dict("key") === nodes("k"))
+          .filter(col("id").isin(ids: _*))
+          .select(col("id"), col("preferredLabel"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        ids.map(labelById)
+      }
     }
-  }
 
   /** Louvain proper over the skill-relation graph (G5,
     * `analysis_queries.md:237-242`): modularity-based communities like the
@@ -518,14 +528,17 @@ object EscoAnalytics {
     * the id mapping. */
   private def centralityGraph(wh: EscoWarehouse): (DataFrame, DataFrame) = {
     val dict = Vertices.dictionary(wh.allNodes.select(col("conceptUri").as("k")), "k")
-    val edges = wh.allEdges
+    (dict, idEdges(wh, dict))
+  }
+
+  /** Every edge of the warehouse as (src, dst) vertex ids of `dict`. */
+  private def idEdges(wh: EscoWarehouse, dict: DataFrame): DataFrame =
+    wh.allEdges
       .join(dict.withColumnRenamed("key", "srcUri"), Seq("srcUri"))
       .withColumnRenamed("id", "src")
       .join(dict.withColumnRenamed("key", "dstUri"), Seq("dstUri"))
       .withColumnRenamed("id", "dst")
       .select("src", "dst")
-    (dict, edges)
-  }
 
   private def withLabels(wh: EscoWarehouse, ranked: DataFrame, dict: DataFrame): DataFrame =
     ranked

@@ -20,6 +20,7 @@ import graft.vector.{HashingEmbedder, SemanticSearch}
   *             [--delete-all]
   *   search    <warehouseDir> <query> [--type skill|occupation|both]
   *             [--threshold 0.5] [--limit 10] [--json]
+  *             [--profile-search | --related]
   *   analyze   <warehouseDir> <queryName>
   *   analyze   <warehouseDir> related-occupations <occLabel> [--bridge]
   *   analyze   <warehouseDir> skill-profile <skillLabel>
@@ -84,23 +85,12 @@ object EscoCli {
       val nodeType = opts.getOrElse("type", "both")
       val threshold = opts.getOrElse("threshold", "0.5").toDouble
       val limit = opts.getOrElse("limit", "10").toInt
-      // --profile-search: hits + related graph in ONE plan (reference did
-      // 1 + k round trips); --related: expansion joined onto plain hits
+      // --profile-search (and its alias --related): hits + related graph
+      // in ONE plan (reference did 1 + k round trips)
       val result =
-        if (opts.contains("profile-search"))
+        if (opts.contains("profile-search") || opts.contains("related"))
           Profiles.profileSearch(wh, search, query, nodeType, threshold, limit)
-        else {
-          val hits = search.search(query, nodeType, threshold, limit)
-          if (opts.contains("related")) {
-            val anchors = hits.select(col("uri"))
-            val expanded =
-              if (nodeType.equalsIgnoreCase("skill"))
-                Profiles.skillRelatedGraph(wh, anchors)
-              else Profiles.occupationRelatedGraph(wh, anchors)
-            hits.join(expanded, Seq("uri"), "left_outer")
-              .orderBy(desc("score"), col("uri"))
-          } else hits
-        }
+        else search.search(query, nodeType, threshold, limit)
       if (opts.contains("json")) printJson(result) else printTable(result)
 
     case "analyze" :: whDir :: queryName :: Nil =>
@@ -208,6 +198,7 @@ object EscoCli {
         """usage:
           |  ingest    <escoCsvDir> <warehouseDir> [--embed] [--embeddings-only] [--delete-all]
           |  search    <warehouseDir> <query> [--type T] [--threshold X] [--limit N] [--json]
+          |            [--profile-search | --related]
           |  analyze   <warehouseDir> <queryName>   (node-counts rel-counts
           |            top-essential-skills top-optional-skills top-occupations
           |            isco-most-occupations skill-cooccurrence isco-depths

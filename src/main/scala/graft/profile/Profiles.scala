@@ -21,6 +21,12 @@ import graft.vector.SemanticSearch
   * expansion independently (inner joins) and coalescing missing groups to
   * `array()` after the left join. Collected arrays are sorted for
   * deterministic output (Q4-style canonicalisation).
+  *
+  * Every function here is a lazy plan over the warehouse, except
+  * [[profileSearch]]: it answers from all-nodes profile rows that the
+  * search engine keeps resident, built by the engine's first profile
+  * search of a type and kept as long as the engine (see
+  * [[graft.vector.SemanticSearch]]).
   */
 object Profiles {
 
@@ -320,7 +326,22 @@ object Profiles {
 
   /** Two-phase profile search as ONE plan (SURVEY G7): top-k semantic hits
     * expanded with their related graph — replaces the reference's 1 + k
-    * round-trip loop (`src/semantic_search.py:205-214`). */
+    * round-trip loop (`src/semantic_search.py:205-214`).
+    *
+    * The expansion's aggregates cover every node whatever the hits are, so
+    * the engine keeps them resident: the first profile search of a type
+    * builds [[skillRelatedGraph]] ("skill") or [[occupationRelatedGraph]]
+    * (any other type) over every node a hit of that type can be, once per
+    * engine and warehouse, and every search is `hits ⋈ resident profile
+    * rows`. A hit with no relation of the profile's kind (a skill hit of a
+    * "both" search has no occupation relations) reads `[]` in every
+    * profile column, as Cypher's collect over an unmatched OPTIONAL MATCH
+    * does. The resident rows live as long as the engine's other resident
+    * frames (see [[SemanticSearch]]).
+    *
+    * @param wh the warehouse `search` searches: a hit whose node `wh` does
+    *   not hold has no profile row and is left out
+    */
   def profileSearch(
       wh: EscoWarehouse,
       search: SemanticSearch,
@@ -328,12 +349,22 @@ object Profiles {
       nodeType: String = "occupation",
       threshold: Double = 0.5,
       limit: Int = 10): DataFrame = {
-    val hits = search.search(query, nodeType, threshold, limit)
-    val expanded = nodeType.toLowerCase match {
-      case "skill" => skillRelatedGraph(wh, hits.select(col("uri")))
-      case _ => occupationRelatedGraph(wh, hits.select(col("uri")))
+    val skill = nodeType.equalsIgnoreCase("skill")
+    val profiles = search.resident((wh, if (skill) "skill" else "occupation")) {
+      val skills = wh.skills.select(col("conceptUri").as("uri"))
+      if (skill) skillRelatedGraph(wh, skills)
+      else occupationRelatedGraph(wh,
+        wh.occupations.select(col("conceptUri").as("uri")).unionByName(skills))
     }
-    hits.join(expanded, Seq("uri"), "left_outer")
+    val hits = search.search(query, nodeType, threshold, limit)
+    // every hit has a profile row, so the join is inner and the (at most
+    // `limit`) hits are the broadcast side: a warm search streams the
+    // resident rows once and exchanges nothing. One partition (the
+    // dimension-sized resident scan runs as one task) lets the final order
+    // sort its at most `limit` rows in place, without a range exchange.
+    profiles.join(broadcast(hits), Seq("uri"))
+      .select((hits.columns ++ profiles.columns.filter(_ != "uri")).map(col): _*)
+      .coalesce(1)
       .orderBy(desc("score"), col("uri"))
   }
 }

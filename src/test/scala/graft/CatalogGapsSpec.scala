@@ -189,4 +189,19 @@ class CatalogGapsSpec extends AnyFunSuite {
     // Q3: PART_OF_SKILLGROUP never populated -> always []
     assert(r.getAs[scala.collection.Seq[Row]]("skill_groups").isEmpty)
   }
+
+  test("shortest path over the whole graph: labels in order, -1 / Nil when unreachable") {
+    // s1 -[related]- s2 directly; s1 and s3 share o1 and o2
+    assert(EscoAnalytics.shortestPathNodes(wh, "manage data", "spark internals") ==
+      Seq("manage data", "spark internals"))
+    assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "spark internals") == 1)
+    val viaJob = EscoAnalytics.shortestPathNodes(wh, "manage data", "communicate")
+    assert(viaJob.size == 3 && viaJob.head == "manage data" && viaJob.last == "communicate")
+    assert(Set("data engineer", "data analyst").contains(viaJob(1)))
+    assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "communicate") == 2)
+    assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "manage data") == 0)
+    // s4 has no edges
+    assert(EscoAnalytics.shortestPathNodes(wh, "manage data", "lonely").isEmpty)
+    assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "lonely") == -1)
+  }
 }

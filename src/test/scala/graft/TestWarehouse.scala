@@ -30,10 +30,10 @@ object TestWarehouse {
       ("g1", "data skills", null, "Group."))
       .withColumn("isSkillGroup", col("conceptUri") === "g1")
     val occupations = df(spark,
-      Seq("conceptUri", "preferredLabel", "description"),
-      ("o1", "data engineer", "Builds pipelines."),
-      ("o2", "data analyst", "Analyses."),
-      ("o3", "ml engineer", "Trains models."))
+      Seq("conceptUri", "preferredLabel", "altLabels", "description"),
+      ("o1", "data engineer", "pipeline engineer", "Builds pipelines."),
+      ("o2", "data analyst", null, "Analyses."),
+      ("o3", "ml engineer", null, "Trains models."))
     val isco = df(spark,
       Seq("conceptUri", "preferredLabel", "code"),
       ("i1", "Data professionals", "1234"),

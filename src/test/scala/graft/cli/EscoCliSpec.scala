@@ -126,6 +126,21 @@ class EscoCliSpec extends AnyFunSuite {
       "--threshold", "-1.0", "--profile-search"))
   }
 
+  test("search --related prints the rows of --profile-search") {
+    def printed(tpe: String, flag: String): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(EscoCli.run(spark, List("search", whDir, "data",
+        "--type", tpe, "--threshold", "-1.0", "--json", flag)))
+      out.toString("UTF-8")
+    }
+    // every node scores above -1: all 5 skills, all 3 occupations
+    for ((tpe, rows) <- Seq("skill" -> 5, "occupation" -> 3, "both" -> 8)) {
+      val profile = printed(tpe, "--profile-search")
+      assert(profile.linesIterator.count(_.startsWith("{\"uri\"")) == rows, profile)
+      assert(printed(tpe, "--related") == profile, tpe)
+    }
+  }
+
   test("real-ESCO smoke: shortest-path and viz-graph over the reference CSVs") {
     val dir = Files.createTempDirectory("graft-cli-realwh").toString
     val wh = EscoWarehouse.build(spark, "/root/reference/ESCO")
