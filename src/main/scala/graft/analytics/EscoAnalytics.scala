@@ -280,41 +280,22 @@ object EscoAnalytics {
 
   /** ISCO hierarchy depth distribution (G1, `analysis_queries.md:87-90`):
     * variable-length BROADER_THAN* with Cypher path-counting semantics. */
-  def iscoHierarchyDepths(wh: EscoWarehouse): DataFrame = {
-    val dict = Vertices.dictionary(
-      wh.broaderIsco.select(col("parentUri").as("k"))
-        .unionByName(wh.broaderIsco.select(col("childUri").as("k"))), "k")
-    val edges = wh.broaderIsco
-      .join(dict.withColumnRenamed("key", "parentUri"), Seq("parentUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "childUri"), Seq("childUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
-    // roots: parents that are nobody's child
-    val roots = edges.select(col("src").as("id"))
-      .distinct()
-      .join(edges.select(col("dst").as("id")).distinct(), Seq("id"), "left_anti")
-    GraphOps.varLengthPaths(edges, roots, maxDepth = 10)
-      .groupBy(col("depth"))
-      .agg(count(lit(1)).as("nodes"), sum(col("n_paths")).as("paths"))
-      .orderBy(col("depth"))
-  }
+  def iscoHierarchyDepths(wh: EscoWarehouse): DataFrame =
+    hierarchyDepths(wh, wh.broaderIsco, maxDepth = 10)
 
   /** SkillGroup hierarchy depth distribution (G1 second instance,
     * `analysis_queries.md:107-110`) over the skill pillar. */
-  def skillHierarchyDepths(wh: EscoWarehouse): DataFrame = {
-    val dict = Vertices.dictionary(
-      wh.broaderSkill.select(col("parentUri").as("k"))
-        .unionByName(wh.broaderSkill.select(col("childUri").as("k"))), "k")
-    val edges = wh.broaderSkill
-      .join(dict.withColumnRenamed("key", "parentUri"), Seq("parentUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "childUri"), Seq("childUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
+  def skillHierarchyDepths(wh: EscoWarehouse): DataFrame =
+    hierarchyDepths(wh, wh.broaderSkill, maxDepth = 12)
+
+  /** (depth, nodes, paths) of a parent→child hierarchy, walked from its
+    * roots: parents that are nobody's child. */
+  private def hierarchyDepths(
+      wh: EscoWarehouse, hierarchy: DataFrame, maxDepth: Int): DataFrame = {
+    val edges = new GraphSession(wh).idEdges(hierarchy, "parentUri", "childUri")
     val roots = edges.select(col("src").as("id")).distinct()
       .join(edges.select(col("dst").as("id")).distinct(), Seq("id"), "left_anti")
-    GraphOps.varLengthPaths(edges, roots, maxDepth = 12)
+    GraphOps.varLengthPaths(edges, roots, maxDepth)
       .groupBy(col("depth"))
       .agg(count(lit(1)).as("nodes"), sum(col("n_paths")).as("paths"))
       .orderBy(col("depth"))
@@ -323,107 +304,69 @@ object EscoAnalytics {
   /** Label → vertex id for the shortest-path entry points; a label with
     * no matching skill fails with a nameable error instead of a bare
     * `head` NoSuchElementException (the CLI surfaces the message). */
-  private def idOfSkillLabel(
-      wh: EscoWarehouse, dict: DataFrame, label: String): Long =
+  private def idOfSkillLabel(wh: EscoWarehouse, label: String): Long =
     wh.skills
       .filter(col("preferredLabel") === label)
-      .join(dict.withColumnRenamed("key", "conceptUri"), Seq("conceptUri"))
-      .select(col("id")).collect().headOption
+      .select(Vertices.id(col("conceptUri"))).collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         s"no skill with preferredLabel '$label'"))
       .getLong(0)
-
-  /** Runs `f` over the shortest-path graph, built once per call: the URI
-    * dictionary (materialized) and the id-mapped edges over all node/edge
-    * types, symmetrized, partitioned on `src` and persisted for the call
-    * ([[GraphOps.shortestPath]]'s `edgesPrepared` contract). Every BFS
-    * level then probes them instead of re-deriving the eight edge tables,
-    * their union and both dictionary joins, and its join exchanges only
-    * the frontier: the cached scan keeps the `src` partitioning, which a
-    * checkpoint would not. */
-  private def withPathGraph[T](wh: EscoWarehouse)(f: (DataFrame, DataFrame) => T): T = {
-    val dict = Vertices.dictionary(wh.allNodes.select(col("conceptUri").as("k")), "k")
-      .localCheckpoint(true)
-    val e = idEdges(wh, dict)
-    val undirected = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try f(dict, undirected)
-    finally undirected.unpersist(blocking = false)
-  }
 
   /** Undirected shortest path length between two skills by label (G2,
     * `analysis_queries.md:138-141`); -1 when they are not connected
     * within 15 hops. */
   def shortestPathBetweenSkills(
       wh: EscoWarehouse, label1: String, label2: String): Int =
-    withPathGraph(wh) { (dict, edges) =>
-      def idOf(label: String): Long = idOfSkillLabel(wh, dict, label)
-      GraphOps.shortestPath(edges, idOf(label1), idOf(label2), maxDepth = 15,
-        edgesPrepared = true).size - 1
-    }
+    shortestPathNodes(wh, label1, label2).size - 1
 
   /** Full G2 semantics: the shortest path's node labels in order (the
-    * Cypher query returns the path object; `analysis_queries.md:138-141`). */
+    * Cypher query returns the path object; `analysis_queries.md:138-141`).
+    * The id edges over all node/edge types are symmetrized, partitioned
+    * on `src` and persisted for the call ([[GraphOps.shortestPath]]'s
+    * `edgesPrepared` contract): every BFS level probes them instead of
+    * re-deriving the eight edge tables and their union, and its join
+    * exchanges only the frontier, because the cached scan keeps the `src`
+    * partitioning, which a checkpoint would not. */
   def shortestPathNodes(
-      wh: EscoWarehouse, label1: String, label2: String): Seq[String] =
-    withPathGraph(wh) { (dict, edges) =>
-      def idOf(label: String): Long = idOfSkillLabel(wh, dict, label)
-      val ids = GraphOps.shortestPath(edges, idOf(label1), idOf(label2),
-        maxDepth = 15, edgesPrepared = true)
-      if (ids.isEmpty) Nil
-      else {
-        val nodes = wh.allNodes.select(col("conceptUri").as("k"), col("preferredLabel"))
-        val labelById = dict.join(nodes, dict("key") === nodes("k"))
-          .filter(col("id").isin(ids: _*))
-          .select(col("id"), col("preferredLabel"))
-          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        ids.map(labelById)
-      }
-    }
+      wh: EscoWarehouse, label1: String, label2: String): Seq[String] = {
+    val session = new GraphSession(wh)
+    val e = session.idEdges(wh.allEdges, "srcUri", "dstUri")
+    val undirected = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ids =
+      try GraphOps.shortestPath(undirected, idOfSkillLabel(wh, label1),
+        idOfSkillLabel(wh, label2), maxDepth = 15, edgesPrepared = true)
+      finally undirected.unpersist(blocking = false)
+    val labelById = session.vertices
+      .filter(col("id").isin(ids: _*))
+      .select(col("id"), col("preferredLabel"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    ids.map(labelById)
+  }
 
   /** Louvain proper over the skill-relation graph (G5,
     * `analysis_queries.md:237-242`): modularity-based communities like the
     * reference's GDS call; community ids differ (documented), the
     * partition itself is comparable. */
-  def skillCommunitiesLouvain(wh: EscoWarehouse, levels: Int = 2): DataFrame = {
-    val dict = Vertices.dictionary(
-      wh.relatedSkill.select(col("srcUri").as("k"))
-        .unionByName(wh.relatedSkill.select(col("dstUri").as("k"))), "k")
-    val edges = wh.relatedSkill
-      .join(dict.withColumnRenamed("key", "srcUri"), Seq("srcUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "dstUri"), Seq("dstUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
-    graft.operators.Louvain.run(edges, levels = levels)
-      .join(dict, Seq("id"))
-      .join(wh.skills.select(col("conceptUri").as("key"),
-        col("preferredLabel")), Seq("key"))
-      .select(col("key").as("uri"), col("preferredLabel"),
-        col("community").as("communityId"))
-      .orderBy(col("communityId"), col("preferredLabel"))
-  }
+  def skillCommunitiesLouvain(wh: EscoWarehouse, levels: Int = 2): DataFrame =
+    skillCommunitiesBy(wh)(graft.operators.Louvain.run(_, levels = levels)
+      .select(col("id"), col("community").as("communityId")))
 
   /** LPA communities — the fast approximation (documented alternative to
     * Louvain above): returns (uri, label, communityId) ordered like the
     * Cypher. */
-  def skillCommunities(wh: EscoWarehouse, iters: Int = 5): DataFrame = {
-    val dict = Vertices.dictionary(
-      wh.relatedSkill.select(col("srcUri").as("k"))
-        .unionByName(wh.relatedSkill.select(col("dstUri").as("k"))), "k")
-    val edges = wh.relatedSkill
-      .join(dict.withColumnRenamed("key", "srcUri"), Seq("srcUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "dstUri"), Seq("dstUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
-    GraphOps.labelPropagation(edges, iters)
-      .join(dict, Seq("id"))
-      .join(wh.skills.select(col("conceptUri").as("key"),
-        col("preferredLabel")), Seq("key"))
-      .select(col("key").as("uri"), col("preferredLabel"),
-        col("label").as("communityId"))
+  def skillCommunities(wh: EscoWarehouse, iters: Int = 5): DataFrame =
+    skillCommunitiesBy(wh)(GraphOps.labelPropagation(_, iters)
+      .select(col("id"), col("label").as("communityId")))
+
+  /** (uri, preferredLabel, communityId) of the RELATED_SKILL graph's
+    * vertices, from `communities`' (id, communityId) over its id edges. */
+  private def skillCommunitiesBy(wh: EscoWarehouse)(
+      communities: DataFrame => DataFrame): DataFrame = {
+    val session = new GraphSession(wh)
+    session.labeled(communities(session.idEdges(wh.relatedSkill, "srcUri", "dstUri")))
+      .select(col("uri"), col("preferredLabel"), col("communityId"))
       .orderBy(col("communityId"), col("preferredLabel")) // T3 multi-key sort
   }
 
@@ -485,32 +428,55 @@ object EscoAnalytics {
       .orderBy(col("skill"))
   }
 
-  /** Build-once scaffolding for running SEVERAL graph analyses in one
-    * process (the CLI's multi-verb `analyze` invocation): the
-    * collision-checked dictionary + long-id edge list, THE one
-    * symmetrized simple adjacency over it, and the related-skill
-    * adjacency are each materialized AT MOST once (eager localCheckpoint
-    * — every frame has several downstream consumers) and shared by every
-    * verb that needs them, instead of each verb rebuilding its own per
-    * process — the `adjPrepared` discipline `GraphOps.linkPrediction` /
-    * `kCorePeel` already honor, now wired end to end. The `*Builds`
-    * counters exist so EscoCliSpec can pin the build-once contract. */
+  /** The graph verbs' one source of vertex ids, built at most once per
+    * session: a vertex id is [[Vertices.id]] of its URI, so every edge
+    * table maps to ids by projection ([[idEdges]]), and ranked ids get
+    * their URI and label back by one join on `id` ([[labeled]]). The first
+    * use materializes the vertex frame and runs the session's one
+    * collision check over it. Share one session across verbs (the CLI's
+    * multi-verb `analyze`) and the vertex frame, the long-id edge list,
+    * THE one symmetrized simple adjacency over it and the related-skill
+    * adjacency are each materialized AT MOST once (localCheckpoint —
+    * every frame has several downstream consumers) instead of once per
+    * verb — the `adjPrepared` discipline `GraphOps.linkPrediction` /
+    * `kCorePeel` honor. A verb called without a session builds its own.
+    * The `*Builds` counters exist so EscoCliSpec can pin the build-once
+    * contract. */
   final class GraphSession(wh: EscoWarehouse) {
+    private[graft] var vertexBuilds = 0
     private[graft] var graphBuilds = 0
     private[graft] var adjacencyBuilds = 0
     private[graft] var relatedBuilds = 0
-    /** (dict, long-id edges), built once, eagerly materialized. */
-    lazy val graph: (DataFrame, DataFrame) = {
+    /** Every node as (id, uri, preferredLabel), collision-checked. The
+      * checkpoint is lazy: the check's job is the one that materializes
+      * it, so the nodes are read and hashed once. */
+    lazy val vertices: DataFrame = {
+      vertexBuilds += 1
+      val v = wh.allNodes
+        .select(Vertices.id(col("conceptUri")).as("id"),
+          col("conceptUri").as("uri"), col("preferredLabel"))
+        .localCheckpoint(false)
+      Vertices.assertNoCollisions(v)
+      v
+    }
+    /** `df`'s (`srcCol`, `dstCol`) URI pairs as (src, dst) vertex ids. */
+    def idEdges(df: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+      vertices // no id leaves the session before the collision check ran
+      df.select(Vertices.id(col(srcCol)).as("src"), Vertices.id(col(dstCol)).as("dst"))
+    }
+    /** `ranked` with each vertex's uri and preferredLabel, joined on `id`. */
+    def labeled(ranked: DataFrame): DataFrame = ranked.join(vertices, Seq("id"))
+    /** Every edge of the warehouse as (src, dst) vertex ids. */
+    lazy val edges: DataFrame = {
       graphBuilds += 1
-      val (d, e) = centralityGraph(wh)
-      (d.localCheckpoint(true), e.localCheckpoint(true))
+      idEdges(wh.allEdges, "srcUri", "dstUri").localCheckpoint(true)
     }
     /** `undirectedAdjacency` over the long-id edges — the
       * linkPrediction/kCorePeel `adjPrepared` shape, shared by
       * triangles + concept-core (+ any future undirected verb). */
     lazy val adjacency: DataFrame = {
       adjacencyBuilds += 1
-      GraphOps.undirectedAdjacency(graph._2).localCheckpoint(true)
+      GraphOps.undirectedAdjacency(edges).localCheckpoint(true)
     }
     /** RELATED_SKILL adjacency (string URIs) for suggest-relations. */
     lazy val relatedSkillAdjacency: DataFrame = {
@@ -522,36 +488,12 @@ object EscoAnalytics {
     }
   }
 
-  /** Shared centrality scaffolding: the collision-checked URI dictionary,
-    * the long-id edge list over ALL node/edge types, and the label rejoin
-    * — one definition so the two PageRank variants can never diverge on
-    * the id mapping. */
-  private def centralityGraph(wh: EscoWarehouse): (DataFrame, DataFrame) = {
-    val dict = Vertices.dictionary(wh.allNodes.select(col("conceptUri").as("k")), "k")
-    (dict, idEdges(wh, dict))
-  }
-
-  /** Every edge of the warehouse as (src, dst) vertex ids of `dict`. */
-  private def idEdges(wh: EscoWarehouse, dict: DataFrame): DataFrame =
-    wh.allEdges
-      .join(dict.withColumnRenamed("key", "srcUri"), Seq("srcUri"))
-      .withColumnRenamed("id", "src")
-      .join(dict.withColumnRenamed("key", "dstUri"), Seq("dstUri"))
-      .withColumnRenamed("id", "dst")
-      .select("src", "dst")
-
-  private def withLabels(wh: EscoWarehouse, ranked: DataFrame, dict: DataFrame): DataFrame =
-    ranked
-      .join(dict, Seq("id"))
-      .join(wh.allNodes.select(col("conceptUri").as("key"),
-        col("preferredLabel")), Seq("key"))
-
   /** PageRank top-N over the full graph (companion centrality to G4;
     * GraphX-native). */
   def topPageRank(wh: EscoWarehouse, n: Int = 20, tol: Double = 0.001): DataFrame = {
-    val (dict, edges) = centralityGraph(wh)
-    withLabels(wh, GraphOps.pageRank(edges, tol), dict)
-      .select(col("key").as("uri"), col("preferredLabel"), col("rank"))
+    val s = new GraphSession(wh)
+    s.labeled(GraphOps.pageRank(s.edges, tol))
+      .select(col("uri"), col("preferredLabel"), col("rank"))
       .orderBy(desc("rank"), col("uri"))
       .limit(n)
   }
@@ -565,10 +507,9 @@ object EscoAnalytics {
       n: Int = 20,
       iters: Int = 10,
       session: Option[GraphSession] = None): DataFrame = {
-    val (dict, edges) = session.map(_.graph).getOrElse(centralityGraph(wh))
-    withLabels(wh, GraphOps.pageRankIntSync(edges, iters), dict)
-      .select(col("key").as("uri"), col("preferredLabel"),
-        col("pr").as("rank_micro"))
+    val s = session.getOrElse(new GraphSession(wh))
+    s.labeled(GraphOps.pageRankIntSync(s.edges, iters))
+      .select(col("uri"), col("preferredLabel"), col("pr").as("rank_micro"))
       .orderBy(desc("rank_micro"), col("uri"))
       .limit(n)
   }
@@ -584,9 +525,9 @@ object EscoAnalytics {
       n: Int = 20,
       iters: Int = 4,
       session: Option[GraphSession] = None): DataFrame = {
-    val (dict, edges) = session.map(_.graph).getOrElse(centralityGraph(wh))
-    withLabels(wh, GraphOps.hitsIntSync(edges, iters), dict)
-      .select(col("key").as("uri"), col("preferredLabel"),
+    val s = session.getOrElse(new GraphSession(wh))
+    s.labeled(GraphOps.hitsIntSync(s.edges, iters))
+      .select(col("uri"), col("preferredLabel"),
         col("hub").as("hub_micro"), col("auth").as("auth_micro"))
       .orderBy(desc("auth_micro"), desc("hub_micro"), col("uri"))
       .limit(n)
@@ -594,21 +535,17 @@ object EscoAnalytics {
 
   /** Triangle-participation top-N over the full graph — graph-cohesion
     * centrality beyond the reference catalog ([[GraphOps.triangles]],
-    * degree-ordered wedge join, hub-skew-immune). */
+    * degree-ordered wedge join, hub-skew-immune), over the session's
+    * symmetric adjacency: orientEdges canonicalizes it to the same simple
+    * edge set as the raw edges. */
   def topTriangles(
       wh: EscoWarehouse,
       n: Int = 20,
       session: Option[GraphSession] = None): DataFrame = {
-    val (dict, edges) = session.map(_.graph).getOrElse(centralityGraph(wh))
-    // with a session, feed the SHARED symmetric adjacency — orientEdges
-    // canonicalizes either shape to the same simple edge set, so the
-    // triangle set is identical; what's saved is the per-verb rebuild
-    val tri = session
-      .map(_.adjacency.select(col("a").as("src"), col("b").as("dst")))
-      .getOrElse(edges)
-    withLabels(wh, GraphOps.triangleParticipation(tri), dict)
-      .select(col("key").as("uri"), col("preferredLabel"),
-        col("n_triangles"))
+    val s = session.getOrElse(new GraphSession(wh))
+    s.labeled(GraphOps.triangleParticipation(
+        s.adjacency.select(col("a").as("src"), col("b").as("dst"))))
+      .select(col("uri"), col("preferredLabel"), col("n_triangles"))
       .orderBy(desc("n_triangles"), col("uri"))
       .limit(n)
   }
@@ -625,15 +562,9 @@ object EscoAnalytics {
       k: Int = 3,
       rounds: Int = 100,
       session: Option[GraphSession] = None): DataFrame = {
-    val (dict, edges) = session.map(_.graph).getOrElse(centralityGraph(wh))
-    val peeled = session match {
-      case Some(s) => GraphOps.kCorePeel(s.adjacency, k, rounds,
-        adjPrepared = true)
-      case None => GraphOps.kCorePeel(edges, k, rounds)
-    }
-    withLabels(wh, peeled, dict)
-      .select(col("key").as("uri"), col("preferredLabel"),
-        col("core_degree"))
+    val s = session.getOrElse(new GraphSession(wh))
+    s.labeled(GraphOps.kCorePeel(s.adjacency, k, rounds, adjPrepared = true))
+      .select(col("uri"), col("preferredLabel"), col("core_degree"))
       .orderBy(desc("core_degree"), col("uri"))
   }
 
@@ -773,19 +704,14 @@ object EscoAnalytics {
       wh: EscoWarehouse,
       n: Int = 20,
       session: Option[GraphSession] = None): DataFrame = {
-    val edges = wh.relatedSkill
-      .select(col("srcUri").as("src"), col("dstUri").as("dst"))
-    val existing = edges
-      .select(least(col("src"), col("dst")).as("node_a"),
-        greatest(col("src"), col("dst")).as("node_b"))
+    val existing = wh.relatedSkill
+      .select(least(col("srcUri"), col("dstUri")).as("node_a"),
+        greatest(col("srcUri"), col("dstUri")).as("node_b"))
       .distinct()
     val labels = wh.skills.select(col("conceptUri"), col("preferredLabel"))
-    val predicted = session match {
-      case Some(s) => graft.operators.GraphOps.linkPrediction(
-        s.relatedSkillAdjacency, maxNeighbors = 64, adjPrepared = true)
-      case None =>
-        graft.operators.GraphOps.linkPrediction(edges, maxNeighbors = 64)
-    }
+    val predicted = graft.operators.GraphOps.linkPrediction(
+      session.getOrElse(new GraphSession(wh)).relatedSkillAdjacency,
+      maxNeighbors = 64, adjPrepared = true)
     predicted
       .join(existing, Seq("node_a", "node_b"), "left_anti")
       .join(labels.select(col("conceptUri").as("node_a"),
@@ -808,12 +734,9 @@ object EscoAnalytics {
       n: Int = 20,
       sampleK: Int = 16,
       session: Option[GraphSession] = None): DataFrame = {
-    val (dict, edges) = session.map(_.graph).getOrElse(centralityGraph(wh))
-    graft.operators.Betweenness.approx(edges, k = sampleK)
-      .join(dict, Seq("id"))
-      .join(wh.allNodes.select(col("conceptUri").as("key"),
-        col("preferredLabel")), Seq("key"))
-      .select(col("key").as("uri"), col("preferredLabel"),
+    val s = session.getOrElse(new GraphSession(wh))
+    s.labeled(graft.operators.Betweenness.approx(s.edges, k = sampleK))
+      .select(col("uri"), col("preferredLabel"),
         col("betweenness"), col("scaled"))
       .orderBy(desc("betweenness"), col("uri"))
       .limit(n)

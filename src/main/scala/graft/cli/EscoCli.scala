@@ -98,9 +98,10 @@ object EscoCli {
       printTable(analyzeOne(wh, queryName, None))
 
     // several catalog analyses in ONE invocation share one GraphSession:
-    // the dictionary/edge scaffolding and THE one symmetric adjacency
-    // materialize once instead of once per verb (`esco analyze <wh>
-    // triangles suggest-relations pagerank-exact ...`). Guarded on every
+    // the collision-checked vertex frame, the id edges and THE one
+    // symmetric adjacency materialize once instead of once per verb
+    // (`esco analyze <wh> triangles suggest-relations pagerank-exact
+    // ...`). Guarded on every
     // name being a catalog verb so the anchored label-argument forms
     // below (related-occupations <label> etc.) are never swallowed.
     case "analyze" :: whDir :: names
@@ -222,9 +223,10 @@ object EscoCli {
       sys.exit(2)
   }
 
-  /** One catalog analysis by name; graph-family verbs route through the
-    * shared [[EscoAnalytics.GraphSession]] when one is supplied (the
-    * multi-verb invocation), and build their own scaffolding when not. */
+  /** One catalog analysis by name; graph-family verbs take their vertex
+    * ids and graph frames from the shared [[EscoAnalytics.GraphSession]]
+    * when one is supplied (the multi-verb invocation), and from a session
+    * of their own when not. */
   private[cli] def analyzeOne(
       wh: EscoWarehouse,
       queryName: String,

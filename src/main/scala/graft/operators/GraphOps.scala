@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.graphx.lib.LabelPropagation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,8 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *  - GraphX programs (connected components, label propagation, PageRank)
   *    for whole-graph analytics where Pregel is the right model.
   *
-  * Edge DataFrames use long vertex ids. For string-keyed graphs (URIs) use
-  * `Vertices.dictionary` to build a collision-checked id mapping first.
+  * Edge DataFrames use long vertex ids. For string-keyed graphs (URIs)
+  * map each key with `Vertices.id` and run `Vertices.assertNoCollisions`
+  * once over the vertex set.
   */
 object GraphOps {
 
@@ -120,23 +121,6 @@ object GraphOps {
           org.apache.spark.sql.types.StructField("depth", org.apache.spark.sql.types.IntegerType),
           org.apache.spark.sql.types.StructField("n_paths", org.apache.spark.sql.types.LongType))))
     else result
-  }
-
-  /** Undirected single-pair shortest path length (hops), or -1 if not
-    * connected within maxDepth. BFS over the symmetrised edge set. */
-  def shortestPathLength(
-      edges: DataFrame,
-      srcId: Long,
-      dstId: Long,
-      maxDepth: Int = 20): Int = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val undirected = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val roots = Seq(srcId).toDF("id")
-    val depths = bfsDepths(undirected, roots, maxDepth)
-    val hit = depths.filter(col("id") === dstId).select("depth").collect()
-    if (hit.isEmpty) -1 else hit.head.getInt(0)
   }
 
   /** Undirected single-pair shortest path WITH the node sequence (full G2
@@ -846,17 +830,20 @@ object GraphOps {
   }
 }
 
-/** String-keyed vertex id assignment with collision detection. */
+/** String-keyed vertex ids: a key's id is its `xxhash64`, so an edge table
+  * maps to ids by projection, with no dictionary join. The hash is safe
+  * once [[assertNoCollisions]] has passed over the vertex set. */
 object Vertices {
-  /** (key → id) dictionary via xxhash64; fails fast on hash collisions so a
-    * silent graph corruption can't happen (SURVEY §1.4 GDS mapping note). */
-  def dictionary(df: DataFrame, keyCol: String): DataFrame = {
-    val dict = df.select(col(keyCol).as("key")).distinct()
-      .withColumn("id", xxhash64(col("key")))
-    val collisions = dict.groupBy("id").count().filter(col("count") > 1)
+  def id(key: Column): Column = xxhash64(key)
+
+  /** Fails fast when two distinct `uri` values of `vertices` (id, uri, …)
+    * share an `id`, so a silent graph corruption can't happen (SURVEY §1.4
+    * GDS mapping note). */
+  def assertNoCollisions(vertices: DataFrame): Unit = {
+    val collisions = vertices.select(col("id"), col("uri")).distinct()
+      .groupBy("id").count().filter(col("count") > 1)
     if (!collisions.isEmpty)
       throw new IllegalStateException(
-        "xxhash64 vertex-id collision detected; use a salted dictionary")
-    dict
+        "xxhash64 vertex-id collision: two distinct keys share an id")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,11 +30,13 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(p((5L, 3)) == 2L)
   }
 
-  test("shortestPathLength: undirected hops; -1 when disconnected") {
-    assert(GraphOps.shortestPathLength(diamond, 5L, 1L) == 3)
-    assert(GraphOps.shortestPathLength(diamond, 2L, 3L) == 2)
+  test("shortestPath length: undirected hops; -1 when disconnected") {
+    def hops(edges: DataFrame, a: Long, b: Long): Int =
+      GraphOps.shortestPath(edges, a, b).size - 1
+    assert(hops(diamond, 5L, 1L) == 3)
+    assert(hops(diamond, 2L, 3L) == 2)
     val twoIslands = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
-    assert(GraphOps.shortestPathLength(twoIslands, 1L, 4L) == -1)
+    assert(hops(twoIslands, 1L, 4L) == -1)
   }
 
   test("shortestPath reconstructs a valid minimal node sequence") {
@@ -382,12 +385,15 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(d(5L) == ((0L, 1L)))
   }
 
-  test("vertex dictionary assigns stable distinct ids") {
-    val dict = Vertices.dictionary(
-      Seq("uri:a", "uri:b", "uri:c", "uri:a").toDF("k"), "k")
-    val rows = dict.collect()
-    assert(rows.length == 3)
-    assert(rows.map(_.getLong(1)).distinct.length == 3)
+  test("vertex ids are stable and distinct; the collision check fails fast") {
+    val keys = Seq("uri:a", "uri:b", "uri:c", "uri:a").toDF("uri")
+      .select(Vertices.id(col("uri")).as("id"), col("uri"))
+    Vertices.assertNoCollisions(keys) // a repeated key is no collision
+    val ids = keys.collect().map(r => r.getString(1) -> r.getLong(0))
+    assert(ids.toMap.size == 3 && ids.map(_._2).distinct.length == 3)
+    assert(ids.filter(_._1 == "uri:a").map(_._2).distinct.length == 1)
+    val clash = Seq((7L, "uri:a"), (7L, "uri:b")).toDF("id", "uri")
+    intercept[IllegalStateException](Vertices.assertNoCollisions(clash))
   }
 
   test("linkPrediction: square closed forms; hub cap bounds pairs, not weights") {

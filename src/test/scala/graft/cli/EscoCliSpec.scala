@@ -44,17 +44,20 @@ class EscoCliSpec extends AnyFunSuite {
   test("multi-verb analyze shares ONE graph build and ONE adjacency") {
     val wh = EscoWarehouse.load(spark, whDir)
     val session = new graft.analytics.EscoAnalytics.GraphSession(wh)
-    // the four shared-scaffolding verbs, driven the way the multi-verb
-    // CLI case drives them
+    // the shared-scaffolding verbs, driven the way the multi-verb CLI
+    // case drives them
     val triangles = EscoCli.analyzeOne(wh, "triangles", Some(session))
     val core = EscoCli.analyzeOne(wh, "concept-core", Some(session))
     val pr = EscoCli.analyzeOne(wh, "pagerank-exact", Some(session))
     val hits = EscoCli.analyzeOne(wh, "hits-exact", Some(session))
     val suggest = EscoCli.analyzeOne(wh, "suggest-relations", Some(session))
-    Seq(triangles, core, pr, hits, suggest).foreach(_.collect(): Unit)
-    // the build-once pin: dictionary+edges and the symmetric adjacency
-    // each materialized exactly once across all five verbs
-    assert(session.graphBuilds == 1, "dict/edges rebuilt across verbs")
+    val betweenness = EscoCli.analyzeOne(wh, "betweenness", Some(session))
+    Seq(triangles, core, pr, hits, suggest, betweenness).foreach(_.collect(): Unit)
+    // the build-once pin: the collision-checked vertex frame, the id
+    // edges and the symmetric adjacency each materialized exactly once
+    // across all six verbs
+    assert(session.vertexBuilds == 1, "collision check rerun across verbs")
+    assert(session.graphBuilds == 1, "edges rebuilt across verbs")
     assert(session.adjacencyBuilds == 1, "adjacency rebuilt across verbs")
     assert(session.relatedBuilds == 1)
     // session answers are the sessionless answers (rows compared as sets;
