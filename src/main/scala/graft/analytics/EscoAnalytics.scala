@@ -6,6 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.GraftFunctions
 import graft.operators.{GraphOps, Vertices}
+import graft.profile.Profiles
 import graft.sources.EscoWarehouse
 import graft.vector.SemanticSearch
 
@@ -219,9 +220,7 @@ object EscoAnalytics {
       .filter(col("preferredLabel") === occLabel)
       .select(col("conceptUri").as("occupationUri"),
         col("preferredLabel").as("source_occupation"))
-    val undirected = wh.relatedSkill.select(col("srcUri"), col("dstUri"))
-      .unionByName(wh.relatedSkill.select(col("dstUri").as("srcUri"),
-        col("srcUri").as("dstUri")))
+    val undirected = wh.relatedSkillUndirected
     val skillLabels = wh.skills.select(col("conceptUri"), col("preferredLabel"))
     wh.essentialFor // anchor's skills s1
       .join(broadcast(anchor), Seq("occupationUri"))
@@ -292,7 +291,7 @@ object EscoAnalytics {
     * roots: parents that are nobody's child. */
   private def hierarchyDepths(
       wh: EscoWarehouse, hierarchy: DataFrame, maxDepth: Int): DataFrame = {
-    val edges = new GraphSession(wh).idEdges(hierarchy, "parentUri", "childUri")
+    val edges = wh.session.idEdges(hierarchy, "parentUri", "childUri")
     val roots = edges.select(col("src").as("id")).distinct()
       .join(edges.select(col("dst").as("id")).distinct(), Seq("id"), "left_anti")
     GraphOps.varLengthPaths(edges, roots, maxDepth)
@@ -301,16 +300,23 @@ object EscoAnalytics {
       .orderBy(col("depth"))
   }
 
-  /** Label → vertex id for the shortest-path entry points; a label with
-    * no matching skill fails with a nameable error instead of a bare
-    * `head` NoSuchElementException (the CLI surfaces the message). */
-  private def idOfSkillLabel(wh: EscoWarehouse, label: String): Long =
-    wh.skills
-      .filter(col("preferredLabel") === label)
-      .select(Vertices.id(col("conceptUri"))).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"no skill with preferredLabel '$label'"))
-      .getLong(0)
+  /** The vertex ids of the skills labelled `label1` and `label2`, the
+    * shortest path's endpoints, resolved in one job. A label several
+    * skills share resolves to the one with the smallest `conceptUri`, so
+    * the endpoint never depends on partition order; a label no skill has
+    * fails with a nameable IllegalArgumentException (the CLI surfaces the
+    * message). */
+  private def idsOfSkillLabels(
+      wh: EscoWarehouse, label1: String, label2: String): (Long, Long) = {
+    val ids = wh.skills
+      .filter(col("preferredLabel").isin(label1, label2))
+      .groupBy(col("preferredLabel"))
+      .agg(Vertices.id(min(col("conceptUri"))))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def id(label: String) = ids.getOrElse(label,
+      throw new IllegalArgumentException(s"no skill with preferredLabel '$label'"))
+    (id(label1), id(label2))
+  }
 
   /** Undirected shortest path length between two skills by label (G2,
     * `analysis_queries.md:138-141`); -1 when they are not connected
@@ -321,22 +327,22 @@ object EscoAnalytics {
 
   /** Full G2 semantics: the shortest path's node labels in order (the
     * Cypher query returns the path object; `analysis_queries.md:138-141`).
-    * The id edges over all node/edge types are symmetrized, partitioned
-    * on `src` and persisted for the call ([[GraphOps.shortestPath]]'s
-    * `edgesPrepared` contract): every BFS level probes them instead of
-    * re-deriving the eight edge tables and their union, and its join
-    * exchanges only the frontier, because the cached scan keeps the `src`
-    * partitioning, which a checkpoint would not. */
+    * The warehouse session's id edges ([[GraphSession.edges]], shared
+    * with PageRank) are symmetrized, partitioned on `src` and persisted
+    * for the call ([[GraphOps.shortestPath]]'s `edgesPrepared` contract):
+    * every BFS level probes them instead of re-deriving their union, and
+    * its join exchanges only the frontier, because the cached scan keeps
+    * the `src` partitioning, which a checkpoint would not. */
   def shortestPathNodes(
       wh: EscoWarehouse, label1: String, label2: String): Seq[String] = {
-    val session = new GraphSession(wh)
-    val e = session.idEdges(wh.allEdges, "srcUri", "dstUri")
+    val (from, to) = idsOfSkillLabels(wh, label1, label2)
+    val session = wh.session
+    val e = session.edges
     val undirected = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val ids =
-      try GraphOps.shortestPath(undirected, idOfSkillLabel(wh, label1),
-        idOfSkillLabel(wh, label2), maxDepth = 15, edgesPrepared = true)
+      try GraphOps.shortestPath(undirected, from, to, maxDepth = 15, edgesPrepared = true)
       finally undirected.unpersist(blocking = false)
     val labelById = session.vertices
       .filter(col("id").isin(ids: _*))
@@ -364,7 +370,7 @@ object EscoAnalytics {
     * vertices, from `communities`' (id, communityId) over its id edges. */
   private def skillCommunitiesBy(wh: EscoWarehouse)(
       communities: DataFrame => DataFrame): DataFrame = {
-    val session = new GraphSession(wh)
+    val session = wh.session
     session.labeled(communities(session.idEdges(wh.relatedSkill, "srcUri", "dstUri")))
       .select(col("uri"), col("preferredLabel"), col("communityId"))
       .orderBy(col("communityId"), col("preferredLabel")) // T3 multi-key sort
@@ -376,9 +382,7 @@ object EscoAnalytics {
     * separately then combined — the Cypher `WITH collect … WITH collect`
     * pipeline as chained grouped aggregations. */
   def combinedConnections(wh: EscoWarehouse, k: Int = 20): DataFrame = {
-    val undirected = wh.relatedSkill.select(col("srcUri"), col("dstUri"))
-      .unionByName(wh.relatedSkill.select(col("dstUri").as("srcUri"),
-        col("srcUri").as("dstUri")))
+    val undirected = wh.relatedSkillUndirected
     val labels = wh.skills.select(col("conceptUri"), col("preferredLabel"))
     val direct = undirected
       .join(labels.withColumnRenamed("conceptUri", "dstUri"), Seq("dstUri"))
@@ -428,20 +432,25 @@ object EscoAnalytics {
       .orderBy(col("skill"))
   }
 
-  /** The graph verbs' one source of vertex ids, built at most once per
-    * session: a vertex id is [[Vertices.id]] of its URI, so every edge
-    * table maps to ids by projection ([[idEdges]]), and ranked ids get
-    * their URI and label back by one join on `id` ([[labeled]]). The first
-    * use materializes the vertex frame and runs the session's one
-    * collision check over it. Share one session across verbs (the CLI's
-    * multi-verb `analyze`) and the vertex frame, the long-id edge list,
-    * THE one symmetrized simple adjacency over it and the related-skill
-    * adjacency are each materialized AT MOST once (localCheckpoint —
-    * every frame has several downstream consumers) instead of once per
-    * verb — the `adjPrepared` discipline `GraphOps.linkPrediction` /
-    * `kCorePeel` honor. A verb called without a session builds its own.
-    * The `*Builds` counters exist so EscoCliSpec can pin the build-once
-    * contract. */
+  /** Every frame derived from one warehouse's tables, each built at most
+    * once, by the first query that needs it. One rule places resident
+    * frames: warehouse-derived frames live here, on the loaded warehouse
+    * (`wh.session`, which every verb and `Profiles.profileSearch` read),
+    * and embedder-derived frames live on the [[SemanticSearch]] engine.
+    *
+    * A vertex id is [[Vertices.id]] of its URI, so every edge table maps
+    * to ids by projection ([[idEdges]]), and ranked ids get their URI and
+    * label back by one join on `id` ([[labeled]]). The first use
+    * materializes the vertex frame and runs the session's one collision
+    * check over it. The vertex frame, the long-id edge list, THE one
+    * symmetrized simple adjacency over it, the related-skill adjacency
+    * and the two all-nodes profile frames are each materialized AT MOST
+    * once (localCheckpoint — every frame has several downstream
+    * consumers) instead of once per verb — the `adjPrepared` discipline
+    * `GraphOps.linkPrediction` / `kCorePeel` honor. A session constructed
+    * over `wh` is independent of `wh.session`; [[topBetweenness]] and
+    * [[topTriangles]] accept one in its place. The `*Builds` counters
+    * exist so EscoCliSpec can pin the build-once contract. */
   final class GraphSession(wh: EscoWarehouse) {
     private[graft] var vertexBuilds = 0
     private[graft] var graphBuilds = 0
@@ -486,12 +495,23 @@ object EscoAnalytics {
           col("dstUri").as("dst")))
         .localCheckpoint(true)
     }
+    /** [[Profiles.skillRelatedGraph]] of every skill: the rows a skill
+      * profile search joins its hits with. */
+    lazy val skillProfiles: DataFrame =
+      Profiles.skillRelatedGraph(wh, skillUris).localCheckpoint(eager = true)
+    /** [[Profiles.occupationRelatedGraph]] of every occupation and skill:
+      * every node a hit of an occupation or "both" search can be. */
+    lazy val occupationProfiles: DataFrame =
+      Profiles.occupationRelatedGraph(wh,
+        wh.occupations.select(col("conceptUri").as("uri")).unionByName(skillUris))
+        .localCheckpoint(eager = true)
+    private def skillUris = wh.skills.select(col("conceptUri").as("uri"))
   }
 
   /** PageRank top-N over the full graph (companion centrality to G4;
     * GraphX-native). */
   def topPageRank(wh: EscoWarehouse, n: Int = 20, tol: Double = 0.001): DataFrame = {
-    val s = new GraphSession(wh)
+    val s = wh.session
     s.labeled(GraphOps.pageRank(s.edges, tol))
       .select(col("uri"), col("preferredLabel"), col("rank"))
       .orderBy(desc("rank"), col("uri"))
@@ -502,12 +522,8 @@ object EscoAnalytics {
     * ([[GraphOps.pageRankIntSync]]) — bit-reproducible across runs and
     * engines where GraphX's double accumulation is not; the variant to
     * reach for when centrality feeds a regression-tested pipeline. */
-  def topPageRankExact(
-      wh: EscoWarehouse,
-      n: Int = 20,
-      iters: Int = 10,
-      session: Option[GraphSession] = None): DataFrame = {
-    val s = session.getOrElse(new GraphSession(wh))
+  def topPageRankExact(wh: EscoWarehouse, n: Int = 20, iters: Int = 10): DataFrame = {
+    val s = wh.session
     s.labeled(GraphOps.pageRankIntSync(s.edges, iters))
       .select(col("uri"), col("preferredLabel"), col("pr").as("rank_micro"))
       .orderBy(desc("rank_micro"), col("uri"))
@@ -520,12 +536,8 @@ object EscoAnalytics {
     * "occupations that require many central skills" (hubs), where plain
     * degree or PageRank conflates the two roles. Deterministic and
     * engine-replayable like [[topPageRankExact]]. */
-  def topHitsExact(
-      wh: EscoWarehouse,
-      n: Int = 20,
-      iters: Int = 4,
-      session: Option[GraphSession] = None): DataFrame = {
-    val s = session.getOrElse(new GraphSession(wh))
+  def topHitsExact(wh: EscoWarehouse, n: Int = 20, iters: Int = 4): DataFrame = {
+    val s = wh.session
     s.labeled(GraphOps.hitsIntSync(s.edges, iters))
       .select(col("uri"), col("preferredLabel"),
         col("hub").as("hub_micro"), col("auth").as("auth_micro"))
@@ -537,12 +549,13 @@ object EscoAnalytics {
     * centrality beyond the reference catalog ([[GraphOps.triangles]],
     * degree-ordered wedge join, hub-skew-immune), over the session's
     * symmetric adjacency: orientEdges canonicalizes it to the same simple
-    * edge set as the raw edges. */
+    * edge set as the raw edges. `session` replaces `wh.session` with a
+    * caller's own [[GraphSession]] over `wh`. */
   def topTriangles(
       wh: EscoWarehouse,
       n: Int = 20,
       session: Option[GraphSession] = None): DataFrame = {
-    val s = session.getOrElse(new GraphSession(wh))
+    val s = session.getOrElse(wh.session)
     s.labeled(GraphOps.triangleParticipation(
         s.adjacency.select(col("a").as("src"), col("b").as("dst"))))
       .select(col("uri"), col("preferredLabel"), col("n_triangles"))
@@ -557,12 +570,8 @@ object EscoAnalytics {
     * run-to-fixpoint (kCorePeel early-exits the first no-op round, so a
     * converged graph never pays for the headroom); pass a small `rounds`
     * only when the bounded-round mid-peel view is wanted. */
-  def conceptCore(
-      wh: EscoWarehouse,
-      k: Int = 3,
-      rounds: Int = 100,
-      session: Option[GraphSession] = None): DataFrame = {
-    val s = session.getOrElse(new GraphSession(wh))
+  def conceptCore(wh: EscoWarehouse, k: Int = 3, rounds: Int = 100): DataFrame = {
+    val s = wh.session
     s.labeled(GraphOps.kCorePeel(s.adjacency, k, rounds, adjPrepared = true))
       .select(col("uri"), col("preferredLabel"), col("core_degree"))
       .orderBy(desc("core_degree"), col("uri"))
@@ -700,17 +709,14 @@ object EscoAnalytics {
     * here proposing catalog-curation candidates. Already-related pairs
     * are anti-joined away. Output: (uri_a, label_a, uri_b, label_b,
     * common_neighbors, aa_micro), strongest first. */
-  def suggestedRelations(
-      wh: EscoWarehouse,
-      n: Int = 20,
-      session: Option[GraphSession] = None): DataFrame = {
+  def suggestedRelations(wh: EscoWarehouse, n: Int = 20): DataFrame = {
     val existing = wh.relatedSkill
       .select(least(col("srcUri"), col("dstUri")).as("node_a"),
         greatest(col("srcUri"), col("dstUri")).as("node_b"))
       .distinct()
     val labels = wh.skills.select(col("conceptUri"), col("preferredLabel"))
     val predicted = graft.operators.GraphOps.linkPrediction(
-      session.getOrElse(new GraphSession(wh)).relatedSkillAdjacency,
+      wh.session.relatedSkillAdjacency,
       maxNeighbors = 64, adjPrepared = true)
     predicted
       .join(existing, Seq("node_a", "node_b"), "left_anti")
@@ -728,13 +734,14 @@ object EscoAnalytics {
 
   /** Betweenness centrality top-N over the full graph (G4,
     * `analysis_queries.md:221-227`) — sampled Brandes; the reference's GDS
-    * call is exact, divergence documented (SURVEY §7.5). */
+    * call is exact, divergence documented (SURVEY §7.5). `session`
+    * replaces `wh.session` with a caller's own [[GraphSession]] over `wh`. */
   def topBetweenness(
       wh: EscoWarehouse,
       n: Int = 20,
       sampleK: Int = 16,
       session: Option[GraphSession] = None): DataFrame = {
-    val s = session.getOrElse(new GraphSession(wh))
+    val s = session.getOrElse(wh.session)
     s.labeled(graft.operators.Betweenness.approx(s.edges, k = sampleK))
       .select(col("uri"), col("preferredLabel"),
         col("betweenness"), col("scaled"))

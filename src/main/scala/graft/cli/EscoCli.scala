@@ -95,22 +95,22 @@ object EscoCli {
 
     case "analyze" :: whDir :: queryName :: Nil =>
       val wh = EscoWarehouse.load(spark, whDir)
-      printTable(analyzeOne(wh, queryName, None))
+      printTable(analyzeOne(wh, queryName))
 
-    // several catalog analyses in ONE invocation share one GraphSession:
-    // the collision-checked vertex frame, the id edges and THE one
-    // symmetric adjacency materialize once instead of once per verb
-    // (`esco analyze <wh> triangles suggest-relations pagerank-exact
-    // ...`). Guarded on every
-    // name being a catalog verb so the anchored label-argument forms
-    // below (related-occupations <label> etc.) are never swallowed.
+    // several catalog analyses in ONE invocation share the loaded
+    // warehouse, and so its session: warehouse-derived frames (the
+    // collision-checked vertex frame, the id edges, THE one symmetric
+    // adjacency) live on the warehouse and materialize once instead of
+    // once per verb (`esco analyze <wh> triangles suggest-relations
+    // pagerank-exact ...`). Guarded on every name being a catalog verb
+    // so the anchored label-argument forms below (related-occupations
+    // <label> etc.) are never swallowed.
     case "analyze" :: whDir :: names
         if names.size >= 2 && names.forall(catalogNames.contains) =>
       val wh = EscoWarehouse.load(spark, whDir)
-      val session = Some(new EscoAnalytics.GraphSession(wh))
       for (name <- names) {
         println(s"== $name ==")
-        printTable(analyzeOne(wh, name, session))
+        printTable(analyzeOne(wh, name))
       }
 
     // anchored analyses that need a label argument
@@ -224,13 +224,10 @@ object EscoCli {
   }
 
   /** One catalog analysis by name; graph-family verbs take their vertex
-    * ids and graph frames from the shared [[EscoAnalytics.GraphSession]]
-    * when one is supplied (the multi-verb invocation), and from a session
-    * of their own when not. */
+    * ids and graph frames from `wh`'s session, so the verbs of one
+    * invocation share them. */
   private[cli] def analyzeOne(
-      wh: EscoWarehouse,
-      queryName: String,
-      session: Option[EscoAnalytics.GraphSession]): DataFrame = queryName match {
+      wh: EscoWarehouse, queryName: String): DataFrame = queryName match {
     case "node-counts" => EscoAnalytics.nodeCounts(wh)
     case "rel-counts" => EscoAnalytics.relationshipCounts(wh)
     case "top-essential-skills" => EscoAnalytics.topEssentialSkills(wh)
@@ -241,18 +238,16 @@ object EscoCli {
     case "isco-depths" => EscoAnalytics.iscoHierarchyDepths(wh)
     case "communities" => EscoAnalytics.skillCommunities(wh)
     case "communities-louvain" => EscoAnalytics.skillCommunitiesLouvain(wh)
-    case "betweenness" => EscoAnalytics.topBetweenness(wh, session = session)
+    case "betweenness" => EscoAnalytics.topBetweenness(wh)
     case "pagerank" => EscoAnalytics.topPageRank(wh)
-    case "pagerank-exact" =>
-      EscoAnalytics.topPageRankExact(wh, session = session)
-    case "hits-exact" => EscoAnalytics.topHitsExact(wh, session = session)
-    case "triangles" => EscoAnalytics.topTriangles(wh, session = session)
-    case "concept-core" => EscoAnalytics.conceptCore(wh, session = session)
+    case "pagerank-exact" => EscoAnalytics.topPageRankExact(wh)
+    case "hits-exact" => EscoAnalytics.topHitsExact(wh)
+    case "triangles" => EscoAnalytics.topTriangles(wh)
+    case "concept-core" => EscoAnalytics.conceptCore(wh)
     case "cluster-skills" => EscoAnalytics.clusterSkills(wh)
     case "label-bpe" => EscoAnalytics.labelBpeMerges(wh)
     case "label-cardinality" => EscoAnalytics.labelCardinality(wh)
-    case "suggest-relations" =>
-      EscoAnalytics.suggestedRelations(wh, session = session)
+    case "suggest-relations" => EscoAnalytics.suggestedRelations(wh)
     case "description-novelty" => EscoAnalytics.descriptionNovelty(wh)
     case "sample-skills" => EscoAnalytics.sampleSkills(wh)
     case "kind-vocab-similarity" =>

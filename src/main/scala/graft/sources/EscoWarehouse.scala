@@ -66,6 +66,23 @@ case class EscoWarehouse(
         lit("RELATED_SKILL").as("relType")))
       .unionByName(tag(partOfSkillGroup, "skillUri", "groupUri", "PART_OF_SKILLGROUP"))
   }
+
+  /** RELATED_SKILL read undirected (J6): every edge as (srcUri, dstUri)
+    * in both directions, the Cypher `(s1)-[:RELATED_SKILL]-(s2)`. */
+  def relatedSkillUndirected: DataFrame =
+    relatedSkill.select(col("srcUri"), col("dstUri"))
+      .unionByName(relatedSkill.select(col("dstUri").as("srcUri"),
+        col("srcUri").as("dstUri")))
+
+  /** Every frame derived from this warehouse's tables, each built at
+    * most once, by the first query that needs it, and kept as long as
+    * the warehouse: the graph verbs' vertex frame, id edges and
+    * adjacencies, and the profile rows `Profiles.profileSearch` joins its
+    * hits with. A warehouse therefore answers from its files as they
+    * were when each frame was first needed; load it again after
+    * rewriting them. `copy` starts a new session. */
+  private[graft] lazy val session: graft.analytics.EscoAnalytics.GraphSession =
+    new graft.analytics.EscoAnalytics.GraphSession(this)
 }
 
 object EscoWarehouse {

@@ -1,7 +1,5 @@
 package graft.vector
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -163,14 +161,16 @@ object PortableHashEmbedder {
   * per query, an engine embeds each node type once: the first search of a
   * type materializes (`conceptUri`, `preferredLabel`, `description`,
   * `embedding`) with null embeddings removed, and every later search of
-  * that type scans the resident frame. [[graft.profile.Profiles]] keeps
-  * its all-nodes profile frames here too ([[resident]]). Nothing is built
-  * at construction: the first query of each kind pays the build. The
-  * frames are eager local checkpoints and live as long as the engine:
-  * Spark's ContextCleaner frees their blocks once the engine is garbage
-  * collected. An engine therefore answers from the warehouse as it was at
-  * its first query of each kind, not from later writes to the warehouse's
-  * files; build one engine per warehouse and reuse it for every query.
+  * that type scans the resident frame. One rule places every resident
+  * frame: embedder-derived frames (these two corpora) live on the engine,
+  * and warehouse-derived frames (the profile rows, the graph frames) live
+  * on the loaded warehouse. Nothing is built at construction: the first
+  * query of each kind pays the build. The corpora are eager local
+  * checkpoints and live as long as the engine: Spark's ContextCleaner
+  * frees their blocks once the engine is garbage collected. An engine
+  * therefore answers from the warehouse as it was at its first query of
+  * each type, not from later writes to the warehouse's files; build one
+  * engine per warehouse and reuse it for every query.
   * [[skillsIndexed]] and [[occupationsIndexed]] stay lazy plans, so
   * [[persistIndex]] and the analytics that embed the corpus read the
   * warehouse as it is.
@@ -191,23 +191,19 @@ class SemanticSearch(wh: EscoWarehouse, embedder: TextEmbedder) {
   lazy val occupationsIndexed: DataFrame =
     embedder.embed(wh.occupations, embedText, "embedding")
 
-  private val residents = mutable.Map.empty[Any, DataFrame]
-
-  /** The frame `plan` computes, built on the first call with `key` and
+  /** The columns a search reads, rows without an embedding removed (P2),
     * kept for the engine's lifetime (an eager local checkpoint), so every
     * later query scans the materialized rows instead of re-deriving the
     * plan from Parquet. A checkpoint, not a `persist`: the CacheManager
     * would share a cached plan between engines over the same files. */
-  private[graft] def resident(key: Any)(plan: => DataFrame): DataFrame =
-    residents.synchronized {
-      residents.getOrElseUpdate(key, plan.localCheckpoint(eager = true))
-    }
-
-  /** The columns a search reads, rows without an embedding removed (P2). */
   private def embedded(indexed: DataFrame): DataFrame = indexed
     .filter(col("embedding").isNotNull)
     .select(col("conceptUri"), col("preferredLabel"), col("description"),
       col("embedding"))
+    .localCheckpoint(eager = true)
+
+  private lazy val skillsEmbedded = embedded(skillsIndexed)
+  private lazy val occupationsEmbedded = embedded(occupationsIndexed)
 
   /** Materialize the embedding columns to Parquet (S5 write-back as a
     * columnar rewrite — the reference does 2 Bolt round-trips per node,
@@ -231,7 +227,7 @@ class SemanticSearch(wh: EscoWarehouse, embedder: TextEmbedder) {
       threshold: Double = 0.5,
       limit: Int = 10): DataFrame = {
     val qv = embedder.embedQuery(query)
-    def scored(indexed: DataFrame, typ: String) = resident(typ)(embedded(indexed))
+    def scored(resident: DataFrame, typ: String) = resident
       .withColumn("score", GraftFunctions.cosineSim(col("embedding"), typedLit(qv)))
       .select(
         col("conceptUri").as("uri"),
@@ -240,10 +236,10 @@ class SemanticSearch(wh: EscoWarehouse, embedder: TextEmbedder) {
         lit(typ).as("type"), // F2: deterministic type literal (Q4 decision)
         col("score"))
     val base = nodeType.toLowerCase match {
-      case "skill" => scored(skillsIndexed, "Skill")
-      case "occupation" => scored(occupationsIndexed, "Occupation")
-      case _ => scored(skillsIndexed, "Skill")
-        .unionByName(scored(occupationsIndexed, "Occupation"))
+      case "skill" => scored(skillsEmbedded, "Skill")
+      case "occupation" => scored(occupationsEmbedded, "Occupation")
+      case _ => scored(skillsEmbedded, "Skill")
+        .unionByName(scored(occupationsEmbedded, "Occupation"))
     }
     base
       .filter(col("score") > threshold) // P6: strict >, reference default 0.5

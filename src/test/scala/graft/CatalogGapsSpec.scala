@@ -204,4 +204,24 @@ class CatalogGapsSpec extends AnyFunSuite {
     assert(EscoAnalytics.shortestPathNodes(wh, "manage data", "lonely").isEmpty)
     assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "lonely") == -1)
   }
+
+  test("shortest path: a label several skills share resolves to the smallest conceptUri") {
+    // s9 repeats s1's label and s0 repeats s2's; neither has an edge, and
+    // the skills span several partitions, so a pick in partition order
+    // could land on either twin
+    val twins = TestWarehouse.df(spark,
+      Seq("conceptUri", "preferredLabel", "altLabels", "description"),
+      ("s9", "manage data", null, "Twin."),
+      ("s0", "spark internals", null, "Twin."))
+      .withColumn("isSkillGroup", lit(false))
+    val dup = wh.copy(skills = twins.unionByName(wh.skills).repartition(3))
+    // "manage data" is s1, not s9
+    assert(EscoAnalytics.shortestPathBetweenSkills(dup, "manage data", "communicate") == 2)
+    // "spark internals" is s0, not s2: no edge reaches it
+    assert(EscoAnalytics.shortestPathNodes(dup, "manage data", "spark internals").isEmpty)
+    assert(EscoAnalytics.shortestPathNodes(dup, "spark internals", "manage data").isEmpty)
+    val e = intercept[IllegalArgumentException](
+      EscoAnalytics.shortestPathNodes(dup, "manage data", "no such skill"))
+    assert(e.getMessage.contains("'no such skill'"))
+  }
 }

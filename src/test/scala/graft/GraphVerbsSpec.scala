@@ -11,9 +11,10 @@ import graft.sources.EscoWarehouse
   * for the graph), and over `ring`, the same warehouse with the related
   * skills s1—s2—s3—s4—s1 plus s1—g1, so the community and link-prediction
   * verbs have more than one edge to work on. Community ids are vertex ids
-  * (`Vertices.id` of a member URI). The verbs that take a `session` are
-  * pinned with and without one shared [[GraphSession]]; rows compare in
-  * output order, doubles to 1e-9. */
+  * (`Vertices.id` of a member URI). Every verb reads the warehouse's own
+  * session; the two that take a `session` are also pinned with a
+  * separately built [[GraphSession]]. Rows compare in output order,
+  * doubles to 1e-9. */
 class GraphVerbsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -35,7 +36,7 @@ class GraphVerbsSpec extends AnyFunSuite {
     }, s"got $got\nwant $exp")
   }
 
-  /** `verb` answers `want` without a session and with `session`. */
+  /** `verb` answers `want` with the warehouse's session and with `session`. */
   private def pinned(session: GraphSession, want: Seq[Product])(
       verb: Option[GraphSession] => DataFrame): Unit = {
     assertRows(verb(None), want)
@@ -83,7 +84,7 @@ class GraphVerbsSpec extends AnyFunSuite {
 
   test("session verbs answer the same rows with and without a shared session") {
     val s = new GraphSession(wh)
-    pinned(s, Seq(
+    assertRows(EscoAnalytics.topPageRankExact(wh), Seq(
       ("i1", "Data professionals", 1032487L),
       ("i2", "ICT professionals", 409732L),
       ("o1", "data engineer", 369318L),
@@ -92,9 +93,8 @@ class GraphVerbsSpec extends AnyFunSuite {
       ("s2", "spark internals", 259171L),
       ("s1", "manage data", 213750L),
       ("g1", "data skills", 150000L),
-      ("s3", "communicate", 150000L))
-    )(session => EscoAnalytics.topPageRankExact(wh, session = session))
-    pinned(s, Seq(
+      ("s3", "communicate", 150000L)))
+    assertRows(EscoAnalytics.topHitsExact(wh), Seq(
       ("o1", "data engineer", 32542L, 1000000L),
       ("o2", "data analyst", 32542L, 734394L),
       ("o3", "ml engineer", 401L, 734394L),
@@ -103,8 +103,7 @@ class GraphVerbsSpec extends AnyFunSuite {
       ("i1", "Data professionals", 0L, 99141L),
       ("i2", "ICT professionals", 32542L, 1223L),
       ("s3", "communicate", 569305L, 0L),
-      ("g1", "data skills", 225391L, 0L))
-    )(session => EscoAnalytics.topHitsExact(wh, session = session))
+      ("g1", "data skills", 225391L, 0L)))
     pinned(s, Seq(
       ("s1", "manage data", 3L),
       ("s2", "spark internals", 3L),
@@ -112,8 +111,8 @@ class GraphVerbsSpec extends AnyFunSuite {
       ("o1", "data engineer", 1L),
       ("o3", "ml engineer", 1L))
     )(session => EscoAnalytics.topTriangles(wh, session = session))
-    pinned(s, Nil)(session => EscoAnalytics.conceptCore(wh, session = session))
-    pinned(s, Seq(
+    assertRows(EscoAnalytics.conceptCore(wh), Nil)
+    assertRows(EscoAnalytics.conceptCore(wh, k = 2), Seq(
       ("s1", "manage data", 5L),
       ("o1", "data engineer", 4L),
       ("s2", "spark internals", 4L),
@@ -122,8 +121,7 @@ class GraphVerbsSpec extends AnyFunSuite {
       ("o3", "ml engineer", 3L),
       ("g1", "data skills", 2L),
       ("i2", "ICT professionals", 2L),
-      ("s3", "communicate", 2L))
-    )(session => EscoAnalytics.conceptCore(wh, k = 2, session = session))
+      ("s3", "communicate", 2L)))
     pinned(s, Seq(
       ("s1", "manage data", 14.666666666667, 14.666666666667),
       ("o1", "data engineer", 12.0, 12.0),
@@ -135,17 +133,16 @@ class GraphVerbsSpec extends AnyFunSuite {
       ("s3", "communicate", 0.666666666667, 0.666666666667),
       ("g1", "data skills", 0.0, 0.0))
     )(session => EscoAnalytics.topBetweenness(wh, session = session))
-    pinned(s, Nil)(session => EscoAnalytics.suggestedRelations(wh, session = session))
+    assertRows(EscoAnalytics.suggestedRelations(wh), Nil)
   }
 
   test("session verbs over the related-skill ring") {
     val s = new GraphSession(ring)
-    pinned(s, Seq(
+    assertRows(EscoAnalytics.suggestedRelations(ring), Seq(
       ("s1", "manage data", "s3", "communicate", 2L, 2000000L),
       ("s2", "spark internals", "s4", "lonely", 2L, 1630930L),
       ("g1", "data skills", "s2", "spark internals", 1L, 630930L),
-      ("g1", "data skills", "s4", "lonely", 1L, 630930L))
-    )(session => EscoAnalytics.suggestedRelations(ring, session = session))
+      ("g1", "data skills", "s4", "lonely", 1L, 630930L)))
     pinned(s, Seq(
       ("s2", "spark internals", 4L),
       ("s1", "manage data", 3L),

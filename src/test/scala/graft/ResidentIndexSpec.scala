@@ -15,16 +15,18 @@ import graft.vector.{HashingEmbedder, SemanticSearch}
 
 /** The read path's resident index, hermetically: the mini warehouse is
   * saved and loaded as a user's would be, and every answer of a
-  * long-lived engine (embedded corpus and all-nodes profile rows built on
-  * first use, then probed) is pinned to the per-query formulation. */
+  * long-lived engine and warehouse (the engine's embedded corpus and the
+  * warehouse's all-nodes profile rows, built on first use, then probed)
+  * is pinned to the per-query formulation. */
 class ResidentIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
 
-  private lazy val wh: EscoWarehouse = {
+  private lazy val whDir: String = {
     val dir = Files.createTempDirectory("graft-resident-wh").toString
     EscoWarehouse.save(TestWarehouse.build(spark), dir)
-    EscoWarehouse.load(spark, dir)
+    dir
   }
+  private lazy val wh: EscoWarehouse = EscoWarehouse.load(spark, whDir)
 
   private val embedder = new HashingEmbedder(64)
   private val queries = Seq("data", "manage data", "data engineer", "ml models")
@@ -131,10 +133,12 @@ class ResidentIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("a warm query reads only the resident frames, never the warehouse files") {
+    // a freshly loaded warehouse, whose profile frames no earlier test built
+    val wh = EscoWarehouse.load(spark, whDir)
     val engine = new SemanticSearch(wh, embedder)
     val before = persisted
     types.foreach(t => Profiles.profileSearch(wh, engine, "data", t, 0.0, 5).collect())
-    // two embedded corpora and two profile frames
+    // the engine's two embedded corpora and the warehouse's two profile frames
     assert((persisted -- before).size == 4)
     for (t <- types) {
       val search = engine.search("manage data", t, 0.0, 5)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, TestWarehouse}
+import graft.analytics.EscoAnalytics
 import graft.sources.EscoWarehouse
 
 /** CLI smoke: every analyze subcommand (including the round-2 additions
@@ -43,35 +44,27 @@ class EscoCliSpec extends AnyFunSuite {
 
   test("multi-verb analyze shares ONE graph build and ONE adjacency") {
     val wh = EscoWarehouse.load(spark, whDir)
-    val session = new graft.analytics.EscoAnalytics.GraphSession(wh)
-    // the shared-scaffolding verbs, driven the way the multi-verb CLI
-    // case drives them
-    val triangles = EscoCli.analyzeOne(wh, "triangles", Some(session))
-    val core = EscoCli.analyzeOne(wh, "concept-core", Some(session))
-    val pr = EscoCli.analyzeOne(wh, "pagerank-exact", Some(session))
-    val hits = EscoCli.analyzeOne(wh, "hits-exact", Some(session))
-    val suggest = EscoCli.analyzeOne(wh, "suggest-relations", Some(session))
-    val betweenness = EscoCli.analyzeOne(wh, "betweenness", Some(session))
-    Seq(triangles, core, pr, hits, suggest, betweenness).foreach(_.collect(): Unit)
+    // every graph verb, without a session, on one loaded warehouse: the
+    // way the multi-verb CLI case drives them
+    val graphVerbs = Seq("skill-depths", "isco-depths", "communities",
+      "communities-louvain", "pagerank", "pagerank-exact", "hits-exact",
+      "triangles", "concept-core", "suggest-relations", "betweenness")
+    val rows = graphVerbs.map(n => n -> EscoCli.analyzeOne(wh, n).collect().toSet).toMap
+    assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "communicate") == 2)
     // the build-once pin: the collision-checked vertex frame, the id
-    // edges and the symmetric adjacency each materialized exactly once
-    // across all six verbs
+    // edges, the symmetric adjacency and the related-skill adjacency each
+    // materialized exactly once across all the verbs
+    val session = wh.session
     assert(session.vertexBuilds == 1, "collision check rerun across verbs")
     assert(session.graphBuilds == 1, "edges rebuilt across verbs")
     assert(session.adjacencyBuilds == 1, "adjacency rebuilt across verbs")
-    assert(session.relatedBuilds == 1)
-    // session answers are the sessionless answers (rows compared as sets;
-    // both sides carry total ORDER BYs but collect-order is still plan
-    // dependent for ties)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
-    assert(rows(pr) ==
-      rows(EscoCli.analyzeOne(wh, "pagerank-exact", None)))
-    assert(rows(triangles) ==
-      rows(EscoCli.analyzeOne(wh, "triangles", None)))
-    assert(rows(core) ==
-      rows(EscoCli.analyzeOne(wh, "concept-core", None)))
-    assert(rows(suggest) ==
-      rows(EscoCli.analyzeOne(wh, "suggest-relations", None)))
+    assert(session.relatedBuilds == 1, "related-skill adjacency rebuilt across verbs")
+    // an explicit session answers what the warehouse's own does (rows
+    // compared as sets: collect order of ties is plan dependent)
+    val own = Some(new EscoAnalytics.GraphSession(wh))
+    assert(EscoAnalytics.topTriangles(wh, session = own).collect().toSet == rows("triangles"))
+    assert(EscoAnalytics.topBetweenness(wh, session = own).collect().toSet ==
+      rows("betweenness"))
   }
 
   test("multi-verb analyze invocation runs end-to-end") {
