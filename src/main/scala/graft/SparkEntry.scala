@@ -7011,9 +7011,10 @@ object SparkEntry {
         .filter(col("w") >= 2)
         .select("src", "dst")
         // the w>=2 filter leaves a small frame, but a CACHED plan keeps
-        // its 32 shuffle partitions (AQE cannot re-coalesce it) and
-        // GraphX Pregel then runs ~32 near-empty tasks per iteration —
-        // measured 2x on g03. Coalesce before persisting.
+        // its 32 shuffle partitions (AQE cannot re-coalesce it), and every
+        // scan of it — g03's CC canonicalize, g04's and g14's adjacency,
+        // g07's edge distinct — would run ~32 near-empty tasks. Coalesce
+        // before persisting.
         .coalesce(4)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -7126,7 +7127,7 @@ object SparkEntry {
         .limit(20)),
     // degree table over the directed multi-parent DAG — GraphOps.degrees
     // was implemented-but-spec-only; two partial aggregations + full
-    // outer join, no GraphX materialization. Aggregated per (out, in)
+    // outer join. Aggregated per (out, in)
     // shape so the lane output stays bounded at any scale.
     "g08_degree_shape" -> ((s, dir) => {
       GraphOps.degrees(dagPart(s, dir))
@@ -7139,15 +7140,15 @@ object SparkEntry {
         .orderBy(col("has_out"), col("has_in"))
     }),
     // FULL-oracle PageRank: deterministic synchronous integer-micro-unit
-    // formulation (GraphOps.pageRankIntSync — GraphX's double-sum order
-    // could never replay cross-engine) over the symmetrized co-purchase
+    // formulation (GraphOps.pageRank — a double-sum order could never
+    // replay cross-engine) over the symmetrized co-purchase
     // graph; the DuckDB oracle unrolls the 5 supersteps as CTEs exactly
     // like g04's LPA.
     "g07_pagerank_int" -> ((s, dir) => {
       val e = coPurchaseEdges(s, dir)
       val sym = e.unionByName(
         e.select(col("dst").as("src"), col("src").as("dst")))
-      GraphOps.pageRankIntSync(sym, iters = 5)
+      GraphOps.pageRank(sym, iters = 5)
         .orderBy(desc("pr"), col("id"))
         .limit(100)
     }),
@@ -7336,7 +7337,7 @@ object SparkEntry {
         |ORDER BY depth""".stripMargin,
     // deterministic synchronous LPA replayed superstep by superstep: per
     // iteration count each (vertex, neighbour-label), rank count-desc
-    // label-asc, keep rank 1 — exactly labelPropagationSync's
+    // label-asc, keep rank 1 — exactly GraphOps.labelPropagation's
     // min(struct(-count, label)) argmax. 5 unrolled CTE levels, then the
     // canonical partition (min member id per final label).
     "g04_communities" -> {
@@ -7465,7 +7466,7 @@ object SparkEntry {
     // integer PageRank replayed superstep by superstep: each iteration
     // joins shares ((pr*850) // (1000*outdeg), floor division both
     // engines) onto the symmetric adjacency and re-aggregates by target —
-    // exactly pageRankIntSync's join + sum shape
+    // exactly GraphOps.pageRank's join + sum shape
     "g07_pagerank_int" -> {
       val step = (i: Int) =>
         s"""p$i AS (
@@ -8881,7 +8882,8 @@ object SparkEntry {
   )
 
   // ------------------------------------------------------------------
-  // Rows-only catalog (no closed-form SQL oracle): LSH dedup, ANN, GraphX
+  // Rows-only catalog (no closed-form SQL oracle): LSH dedup, ANN,
+  // sampled betweenness
   // ------------------------------------------------------------------
 
   // Rows-only entries carry SELF-VERIFYING invariant columns: the exact
@@ -9716,8 +9718,8 @@ object SparkEntry {
         .limit(100)
     }),
     // FULL-oracle community detection (was no_oracle through round 6):
-    // deterministic synchronous LPA (ties -> smallest label; GraphX's
-    // hash-order tie-break could never replay cross-engine) over the g03
+    // deterministic synchronous LPA (ties -> smallest label, so the
+    // partition replays cross-engine) over the g03
     // co-purchase graph, emitted as the canonical partition — one row per
     // community labeled by its smallest member id. The DuckDB oracle
     // unrolls the 5 supersteps as CTEs and hash-matches the partition
@@ -9725,7 +9727,7 @@ object SparkEntry {
     // InvariantsSpec, which recomputes it from the same membership.
     "g04_communities" -> ((s, dir) => {
       // same grouped-pair co-purchase edge frame as g03 (coPurchaseEdges)
-      GraphOps.labelPropagationSync(coPurchaseEdges(s, dir), iters = 5)
+      GraphOps.labelPropagation(coPurchaseEdges(s, dir), iters = 5)
         .groupBy(col("label"))
         .agg(min(col("id")).as("community"), count(lit(1)).as("csize"))
         .select(col("community"), col("csize"))

@@ -360,8 +360,12 @@ object EscoAnalytics {
       .select(col("id"), col("community").as("communityId")))
 
   /** LPA communities — the fast approximation (documented alternative to
-    * Louvain above): returns (uri, label, communityId) ordered like the
-    * Cypher. */
+    * Louvain above): synchronous [[GraphOps.labelPropagation]], ties to
+    * the smallest label; returns (uri, preferredLabel, communityId)
+    * ordered like the Cypher. Synchronous LPA can leave a bipartite
+    * component split in two: the two skills of an isolated related pair
+    * swap labels every superstep and end, after the default 5, as two
+    * communities, where [[skillCommunitiesLouvain]] returns one. */
   def skillCommunities(wh: EscoWarehouse, iters: Int = 5): DataFrame =
     skillCommunitiesBy(wh)(GraphOps.labelPropagation(_, iters)
       .select(col("id"), col("label").as("communityId")))
@@ -508,23 +512,13 @@ object EscoAnalytics {
     private def skillUris = wh.skills.select(col("conceptUri").as("uri"))
   }
 
-  /** PageRank top-N over the full graph (companion centrality to G4;
-    * GraphX-native). */
-  def topPageRank(wh: EscoWarehouse, n: Int = 20, tol: Double = 0.001): DataFrame = {
+  /** PageRank top-N over the full graph (companion centrality to G4):
+    * integer micro-unit PageRank ([[GraphOps.pageRank]], `iters`
+    * synchronous iterations), so the ranking is the same on every run,
+    * partitioning and engine. Output: (uri, preferredLabel, rank_micro). */
+  def topPageRank(wh: EscoWarehouse, n: Int = 20, iters: Int = 10): DataFrame = {
     val s = wh.session
-    s.labeled(GraphOps.pageRank(s.edges, tol))
-      .select(col("uri"), col("preferredLabel"), col("rank"))
-      .orderBy(desc("rank"), col("uri"))
-      .limit(n)
-  }
-
-  /** [[topPageRank]]'s deterministic twin: integer micro-unit PageRank
-    * ([[GraphOps.pageRankIntSync]]) — bit-reproducible across runs and
-    * engines where GraphX's double accumulation is not; the variant to
-    * reach for when centrality feeds a regression-tested pipeline. */
-  def topPageRankExact(wh: EscoWarehouse, n: Int = 20, iters: Int = 10): DataFrame = {
-    val s = wh.session
-    s.labeled(GraphOps.pageRankIntSync(s.edges, iters))
+    s.labeled(GraphOps.pageRank(s.edges, iters))
       .select(col("uri"), col("preferredLabel"), col("pr").as("rank_micro"))
       .orderBy(desc("rank_micro"), col("uri"))
       .limit(n)
@@ -535,7 +529,7 @@ object EscoAnalytics {
     * occupations require" (authorities on requirement edges) from
     * "occupations that require many central skills" (hubs), where plain
     * degree or PageRank conflates the two roles. Deterministic and
-    * engine-replayable like [[topPageRankExact]]. */
+    * engine-replayable like [[topPageRank]]. */
   def topHitsExact(wh: EscoWarehouse, n: Int = 20, iters: Int = 4): DataFrame = {
     val s = wh.session
     s.labeled(GraphOps.hitsIntSync(s.edges, iters))
@@ -581,7 +575,7 @@ object EscoAnalytics {
     * integer micro-units ([[graft.operators.Similarity.Ivf.kMeansAssignInt]]):
     * the SemDeDup-style grouping step for near-duplicate skill discovery
     * and per-cluster curation, deterministic and engine-replayable like
-    * [[topPageRankExact]]. Output: one row per embedded skill,
+    * [[topPageRank]]. Output: one row per embedded skill,
     * (uri, preferredLabel, cluster, d2), cluster-then-distance ordered
     * so each cluster reads nearest-first. */
   def clusterSkills(wh: EscoWarehouse, k: Int = 16, iters: Int = 2): DataFrame = {

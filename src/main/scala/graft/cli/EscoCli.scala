@@ -102,7 +102,7 @@ object EscoCli {
     // collision-checked vertex frame, the id edges, THE one symmetric
     // adjacency) live on the warehouse and materialize once instead of
     // once per verb (`esco analyze <wh> triangles suggest-relations
-    // pagerank-exact ...`). Guarded on every name being a catalog verb
+    // pagerank ...`). Guarded on every name being a catalog verb
     // so the anchored label-argument forms below (related-occupations
     // <label> etc.) are never swallowed.
     case "analyze" :: whDir :: names
@@ -204,7 +204,7 @@ object EscoCli {
           |            top-essential-skills top-optional-skills top-occupations
           |            isco-most-occupations skill-cooccurrence isco-depths
           |            skill-depths communities communities-louvain betweenness
-          |            pagerank pagerank-exact hits-exact triangles concept-core
+          |            pagerank hits-exact triangles concept-core
           |            cluster-skills label-bpe label-cardinality
           |            suggest-relations description-novelty sample-skills
           |            kind-vocab-similarity
@@ -240,7 +240,6 @@ object EscoCli {
     case "communities-louvain" => EscoAnalytics.skillCommunitiesLouvain(wh)
     case "betweenness" => EscoAnalytics.topBetweenness(wh)
     case "pagerank" => EscoAnalytics.topPageRank(wh)
-    case "pagerank-exact" => EscoAnalytics.topPageRankExact(wh)
     case "hits-exact" => EscoAnalytics.topHitsExact(wh)
     case "triangles" => EscoAnalytics.topTriangles(wh)
     case "concept-core" => EscoAnalytics.conceptCore(wh)
@@ -270,8 +269,8 @@ object EscoCli {
     "node-counts", "rel-counts", "top-essential-skills",
     "top-optional-skills", "top-occupations", "isco-most-occupations",
     "skill-cooccurrence", "isco-depths", "communities",
-    "communities-louvain", "betweenness", "pagerank", "pagerank-exact",
-    "hits-exact", "triangles", "concept-core", "cluster-skills",
+    "communities-louvain", "betweenness", "pagerank", "hits-exact",
+    "triangles", "concept-core", "cluster-skills",
     "label-bpe", "label-cardinality", "suggest-relations",
     "description-novelty", "sample-skills", "kind-vocab-similarity",
     "top-skills-by-relationships", "top-occupations-optional",

@@ -16,10 +16,17 @@ import org.apache.spark.sql.DataFrame
   *
   * [[stage]] keeps the default and adds the cluster path behind one
   * session conf: set `spark.graft.checkpointDir` to a reliable
-  * (HDFS/object-store) location and every barrier in the engine becomes
-  * a reliable `Dataset.checkpoint` to that directory instead — same call
-  * sites, same eager semantics, survivable executors. The conf is read
-  * per call, so one session can flip modes between pipelines.
+  * (HDFS/object-store) location and every barrier staged through this
+  * object — [[stage]], [[stageAll]] and [[stageAsync]], called by the
+  * SparkEntry funnel lanes, `Incremental`, `CorpusStats`, `Dedup` and
+  * `Sampling` — becomes a reliable `Dataset.checkpoint` to that
+  * directory instead: same call sites, same eager semantics, survivable
+  * executors. The conf is read per call, so one session can flip modes
+  * between pipelines. Code that calls `localCheckpoint`/`checkpoint`
+  * directly does NOT read the conf and stays executor-local: among
+  * others the iterative graph operators (`GraphOps`, `Louvain`,
+  * `Betweenness`), the warehouse session in `EscoAnalytics` and
+  * `SemanticSearch`'s embedded corpora.
   *
   * Operational constraints of the reliable path:
   *

@@ -121,7 +121,7 @@ object Betweenness {
 
   /** Integer-exact (micro-unit) Brandes dependency accumulation over the
     * given roots — the engine-portable twin of [[approx]]'s backward
-    * phase, by the same fixed-point trick as `GraphOps.pageRankIntSync`:
+    * phase, by the same fixed-point trick as `GraphOps.pageRank`:
     * a predecessor's per-edge contribution is
     * `(sigma_v * (1_000_000 + delta_w)) DIV sigma_w` — every operand a
     * non-negative exact integer, `DIV` = floor = DuckDB `//` — so the
@@ -194,7 +194,7 @@ object Betweenness {
       // fragment materializes ONCE inside the single final action
       // (measured ~4x over the checkpoint's row-encoded RDD boundary).
       // Safe HERE because this chain has no broadcast subqueries; in
-      // loops that broadcast a per-iteration aggregate (pageRankIntSync,
+      // loops that broadcast a per-iteration aggregate (pageRank,
       // hitsIntSync) the broadcast jobs execute child plans directly and
       // a lazy persist measured ~12x SLOWER — those keep the hard
       // checkpoint barrier

@@ -706,12 +706,12 @@ object Dedup {
     * (filtered to the confidence threshold), `simhashNearDup`, etc. */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    // Star CC, not GraphX: duplicate chains are path-shaped (each doc near
-    // the next drift step), so round count must not scale with chain
-    // length; and the candidate-pair graph is tiny next to the corpus, so
-    // the GraphX materialization fixed cost would dominate. The component
-    // label IS the cluster's min id — exactly the keeper contract.
-    GraphOps.connectedComponentsStar(edges)
+    // Duplicate chains are path-shaped (each doc near the next drift
+    // step); the star rounds keep the round count independent of chain
+    // length, and the candidate-pair graph is usually small enough for
+    // connectedComponents' driver union-find. The component label IS the
+    // cluster's min id — exactly the keeper contract.
+    GraphOps.connectedComponents(edges)
       .select(col("id"), col("component").as("keep_id"))
   }
 

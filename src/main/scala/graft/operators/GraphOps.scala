@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.graphx.lib.LabelPropagation
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -10,14 +8,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * Replaces the reference's server-side Cypher traversals
   * (`analysis_queries.md:87-110` variable-length paths, `:138-141`
-  * shortestPath, `:206-242` GDS betweenness/Louvain) with two Spark shapes:
-  *
-  *  - relational iteration: a driver loop of joins over a frontier
-  *    DataFrame, `localCheckpoint`ed per hop to cut lineage — hierarchies
-  *    are shallow (ESCO ISCO tree ≈ 8 levels) so the loop runs O(depth)
-  *    joins, each a shuffle on the edge key, AQE-sized;
-  *  - GraphX programs (connected components, label propagation, PageRank)
-  *    for whole-graph analytics where Pregel is the right model.
+  * shortestPath, `:206-242` GDS betweenness/Louvain) with one Spark shape,
+  * relational iteration: a driver loop of joins and group-bys over a
+  * frontier or state DataFrame, `localCheckpoint`ed per round to cut
+  * lineage. Traversals run O(depth) rounds — hierarchies are shallow
+  * (ESCO ISCO tree ≈ 8 levels) — each a shuffle on the edge key,
+  * AQE-sized. The whole-graph algorithms (connected components, label
+  * propagation, PageRank, HITS) run their Pregel supersteps the same way,
+  * one join plus one aggregation per superstep (the Pregelix design), with
+  * integer arithmetic and smallest-id tie-breaks so results do not move
+  * with partition count or core count, and one implementation per
+  * algorithm.
   *
   * Edge DataFrames use long vertex ids. For string-keyed graphs (URIs)
   * map each key with `Vertices.id` and run `Vertices.assertNoCollisions`
@@ -224,78 +225,10 @@ object GraphOps {
       .toDF("step", "id")
   }
 
-  // ---- GraphX analytics ----
+  // ---- whole-graph analytics ----
 
-  private def toGraph(edges: DataFrame): Graph[Int, Int] = {
-    // Pregel recomputes its edge input every superstep — persist, or the
-    // (possibly expensive) upstream plan re-runs per iteration. Partition
-    // count is left to the upstream plan: measured locally, coalescing a
-    // small graph to few partitions costs more (lost parallelism) than the
-    // extra task overhead saves.
-    val edgeRdd = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    Graph.fromEdges(edgeRdd, defaultValue = 1,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Connected components → (id, component). */
-  def connectedComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    toGraph(edges).connectedComponents().vertices
-      .toDF("id", "component")
-  }
-
-  /** Relational connected components: min-label propagation to fixpoint —
-    * the shuffle-transparent alternative to the GraphX/Pregel version
-    * (same output contract: component id = min vertex id). Each round is
-    * one join + one aggregation over the symmetric edge set; rounds are
-    * O(diameter). Preferable where the GraphX materialization cost
-    * dominates (short chains of relational work before/after) or where
-    * RDD caching pressure is unwanted. */
-  def connectedComponentsRelational(
-      edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val neighborMin = sym
-        .join(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("component", "ncomp"), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("ncomp")).as("nmin"))
-      val updated = labels
-        .join(neighborMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nmin"), col("component")))
-            .as("component"),
-          (col("nmin") < col("component")).as("moved"))
-        .localCheckpoint()
-      changed = updated.filter(col("moved")).count()
-      labels = updated.drop("moved")
-      iter += 1
-    }
-    // A silent early exit would hand back non-converged labels and break
-    // the "component id = min vertex id" contract on long-chain graphs.
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponentsRelational did not converge in $maxIter " +
-          s"iterations ($changed labels still moving); raise maxIter or " +
-          "use connectedComponentsStar (O(log n) rounds) for " +
-          "large-diameter graphs")
-    labels
-  }
-
-  /** Connected components by alternating large-star/small-star contraction
+  /** Connected components → (id, component), the component labeled by its
+    * smallest member id. Alternating large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14): converges in O(log² n) rounds regardless of graph DIAMETER,
     * unlike min-label propagation (O(diameter) rounds) — the scale path for
@@ -306,8 +239,9 @@ object GraphOps {
     * large-star: every neighbor v > u re-points to m = min(N(u) ∪ {u});
     * small-star: every neighbor v ≤ u (plus u) points to the same m.
     * Fixpoint = forest of depth-1 stars rooted at each component's min id.
-    * Output contract matches [[connectedComponents]]: (id, component). */
-  def connectedComponentsStar(
+    * Vertices are the edge endpoints; a vertex whose only edge is a
+    * self-loop is its own component. */
+  def connectedComponents(
       edges: DataFrame, maxIter: Int = 40,
       driverCutoff: Int = 100000): DataFrame = {
     val spark = edges.sparkSession
@@ -408,7 +342,7 @@ object GraphOps {
     }
     if (!done && iter >= maxIter)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
+        s"connectedComponents did not converge in $maxIter rounds")
     // fixpoint edges are (member, componentMin); roots map to themselves
     allIds
       .join(e.select(col("u").as("id"), col("v").as("component")),
@@ -417,18 +351,10 @@ object GraphOps {
         coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Label propagation communities (LPA, `iters` supersteps) → (id, label).
-    * Stands in for the reference's GDS Louvain (SURVEY G5 divergence). */
-  def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    LabelPropagation.run(toGraph(edges), iters).vertices.toDF("id", "label")
-  }
-
   /** Canonical simple-graph symmetrized adjacency (a, b) as a PLAN —
     * self-loops and duplicate/reversed edges collapsed, both directions
     * emitted, NOT materialized. The ONE undirected-simple-graph
-    * definition: labelPropagationSync, kCorePeel and linkPrediction must
+    * definition: labelPropagation, kCorePeel and linkPrediction must
     * not drift. Public so a caller running several undirected operators
     * over the same graph can persist this once and pass it back in via
     * the prepared-adjacency contract ([[linkPrediction]]'s
@@ -450,23 +376,29 @@ object GraphOps {
       edges: DataFrame, eager: Boolean = false): DataFrame =
     undirectedAdjacency(edges).localCheckpoint(eager)
 
-  /** Synchronous LPA with DETERMINISTIC tie-breaks → (id, label): each
-    * superstep every vertex adopts the most frequent label among its
-    * neighbours' previous-superstep labels, ties broken toward the
-    * SMALLEST label. GraphX's LabelPropagation breaks count ties by
-    * hash-map iteration order — stable only within one JVM, so its
-    * partition can never be replayed by another engine; this formulation
-    * is exactly reproducible in SQL (per superstep: count labels per
-    * (vertex, label), rank count-desc label-asc, take rank 1), which is
-    * what lets g04 carry a full DuckDB oracle.
+  /** Label propagation communities (LPA, `iters` synchronous supersteps)
+    * → (id, label); stands in for the reference's GDS Louvain (SURVEY G5
+    * divergence). Each superstep every vertex adopts the most frequent
+    * label among its neighbours' previous-superstep labels, ties broken
+    * toward the SMALLEST label. That tie-break makes the partition a
+    * function of the graph alone — not of partitioning, shuffle order or
+    * core count — and exactly reproducible in SQL (per superstep: count
+    * labels per (vertex, label), rank count-desc label-asc, take rank 1),
+    * which is what lets g04 carry a full DuckDB oracle.
+    *
+    * Known behaviour of synchronous LPA: a bipartite component can swap
+    * labels between its two sides every superstep and never agree. The
+    * smallest case is an isolated pair u—v, which after an odd number of
+    * supersteps holds (u → v's label, v → u's label): two communities,
+    * where Louvain returns one.
     *
     * Scale shape: per superstep one neighbour equi-join plus two
-    * partial-aggregable groupBys, all keyed by vertex id — the same
-    * shuffle profile as a Pregel superstep. Lineage is cut per superstep
-    * (lazy localCheckpoint) so `iters` never compounds the plan; labels
-    * are one (id, label) row per vertex. Vertices are the edge endpoints
-    * (an isolated vertex has no row here, as in [[labelPropagation]]). */
-  def labelPropagationSync(edges: DataFrame, iters: Int = 5): DataFrame = {
+    * partial-aggregable groupBys, all keyed by vertex id. Lineage is cut
+    * per superstep (lazy localCheckpoint) so `iters` never compounds the
+    * plan; labels are one (id, label) row per vertex. Vertices are the
+    * edge endpoints; an isolated vertex or a self-loop-only vertex has no
+    * row. */
+  def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame = {
     val adj = symmetricAdjacency(edges)
     var labels = adj.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -485,19 +417,12 @@ object GraphOps {
     labels
   }
 
-  /** PageRank → (id, rank). */
-  def pageRank(edges: DataFrame, tol: Double = 0.001): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    toGraph(edges).pageRank(tol).vertices.toDF("id", "rank")
-  }
-
-  /** Deterministic synchronous PageRank in INTEGER micro-units — the
-    * engine-portable twin of [[pageRank]], the same replay trick that
-    * took g04's communities to a full external oracle: every step is
-    * exact integer arithmetic (`DIV` = floor division = DuckDB `//`), so
-    * a fixed iteration count replays bit-for-bit in any engine, where
-    * GraphX's double-accumulation order never could.
+  /** Synchronous PageRank in INTEGER micro-units → (id, pr): every step
+    * is exact integer arithmetic (`DIV` = floor division = DuckDB `//`),
+    * so a fixed iteration count gives the same values under any
+    * partitioning and replays bit-for-bit in any engine — the trick that
+    * lets g07 carry a full DuckDB oracle, where a double-sum PageRank
+    * depends on the order its shares are added in.
     *
     * pr_0(v) = 1,000,000; each iteration every vertex with out-edges
     * sends share(u) = (pr(u) * dampingPermille) DIV (1000 * outdeg(u))
@@ -509,13 +434,13 @@ object GraphOps {
     *
     * Scale shape: per iteration ONE join of the (persistable) edge frame
     * against the rank frame on src and one aggregation by dst — the same
-    * shuffle profile as [[labelPropagationSync]]; iteration count is
+    * shuffle profile as [[labelPropagation]]; iteration count is
     * fixed, not data-dependent. Overflow bound: total mass never exceeds
     * |V| × 1e6 micro-units (flooring and dangling vertices only lose
     * mass — spec-pinned), so the `pr * dampingPermille` product stays
     * under Long.MaxValue up to |V| ≈ 1e10 even if one vertex held ALL
     * mass; ANSI mode would throw, not wrap, beyond that. */
-  def pageRankIntSync(
+  def pageRank(
       edges: DataFrame,
       iters: Int = 5,
       dampingPermille: Int = 850): DataFrame = {
@@ -549,7 +474,7 @@ object GraphOps {
   }
 
   /** Deterministic synchronous HITS (hubs & authorities) in integer
-    * micro-units — same cross-engine replay trick as [[pageRankIntSync]]:
+    * micro-units — same cross-engine replay trick as [[pageRank]]:
     * floating-point mutual reinforcement sums in data-dependent order and
     * can never hash-match across engines, but an integer formulation with
     * floor-division max-normalization replays exactly as unrolled CTEs.
@@ -607,7 +532,7 @@ object GraphOps {
   }
 
   /** In/out degree per vertex → (id, out_degree, in_degree). Pure
-    * relational — two partial aggregations, no GraphX materialisation. */
+    * relational — two partial aggregations. */
   def degrees(edges: DataFrame): DataFrame = {
     val out = edges.groupBy(col("src").as("id")).agg(count("*").as("out_degree"))
     val in = edges.groupBy(col("dst").as("id")).agg(count("*").as("in_degree"))
@@ -702,8 +627,8 @@ object GraphOps {
     * nothing, so skipping the remainder is exact); with fewer rounds the
     * result is the documented bounded-round over-approximation. The
     * FIXED round cap is what makes the operator engine-portable — the
-    * same unrolled-CTE replay as [[labelPropagationSync]] /
-    * [[pageRankIntSync]]; a run-to-fixpoint loop's round count is
+    * same unrolled-CTE replay as [[labelPropagation]] /
+    * [[pageRank]]; a run-to-fixpoint loop's round count is
     * data-dependent and an oracle could not know where to stop.
     * Per round: two joins of the lazily-checkpointed adjacency against
     * the id-only survivor set + one count — nothing wider than a long

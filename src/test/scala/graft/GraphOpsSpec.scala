@@ -191,73 +191,60 @@ class GraphOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponents finds the two islands") {
-    val cc = GraphOps.connectedComponents(Seq((1L, 2L), (2L, 3L), (10L, 11L))
-        .toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc(1L) == cc(2L) && cc(2L) == cc(3L))
-    assert(cc(10L) == cc(11L))
-    assert(cc(1L) != cc(10L))
+  /** Driver-side union-find over `edges`: (id → smallest id of its
+    * component) for every endpoint, self-loops included. */
+  private def componentsRef(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
+    for ((u, v) <- edges) {
+      parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 
-  test("relational CC equals GraphX CC on random graphs (2 seeds)") {
-    for (seed <- Seq(4, 9)) {
-      val rnd = new scala.util.Random(seed)
-      val edges = (1 to 60).map(_ =>
-        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .filter(e => e._1 != e._2).toDF("src", "dst")
-      val viaGraphX = GraphOps.connectedComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaSql = GraphOps.connectedComponentsRelational(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaSql == viaGraphX, s"seed=$seed")
-      val viaStar = GraphOps.connectedComponentsStar(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaStar == viaGraphX, s"seed=$seed (star)")
-    }
+  private def components(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("connectedComponents finds the two islands") {
+    val cc = components(GraphOps.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")))
+    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("star CC converges on a long chain where min-label propagation can't") {
-    // 80-node path: diameter 79 > the default 30 min-label rounds.
-    // driverCutoff=0 forces the DISTRIBUTED star rounds (the default
-    // would take the size-gated driver union-find on a fixture this small)
+    // 80-node path: diameter 79, so min-label propagation would need 79
+    // rounds; the star rounds need O(log² n). driverCutoff=0 forces the
+    // DISTRIBUTED star rounds (the default would take the size-gated
+    // driver union-find on a fixture this small)
     val chain = (0L until 79L).map(i => (i, i + 1)).toDF("src", "dst")
-    val cc = GraphOps.connectedComponentsStar(chain, driverCutoff = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = components(GraphOps.connectedComponents(chain, driverCutoff = 0))
     assert(cc.size == 80 && cc.values.forall(_ == 0L))
-    // and min-label now FAILS LOUDLY instead of returning wrong labels
-    val e = intercept[IllegalStateException] {
-      GraphOps.connectedComponentsRelational(chain, maxIter = 10).collect()
-    }
-    assert(e.getMessage.contains("did not converge"))
   }
 
-  test("star CC equals GraphX CC across random graph shapes (5 seeds, mixed density)") {
+  test("star CC equals a driver union-find reference across random graph shapes (5 seeds, mixed density)") {
     for (seed <- Seq(1, 7, 13, 21, 33)) {
       val rnd = new scala.util.Random(seed)
       val n = 30 + rnd.nextInt(120)
       val m = n / 2 + rnd.nextInt(2 * n)
-      val edges = (1 to m).map(_ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2).toDF("src", "dst")
-      val viaGraphX = GraphOps.connectedComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val es = (1 to m).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter(e => e._1 != e._2)
+      val want = componentsRef(es)
+      val edges = es.toDF("src", "dst")
       // both the size-gated driver union-find (default at this size) and
-      // the forced distributed star rounds must agree with GraphX
-      val viaDriver = GraphOps.connectedComponentsStar(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaStar = GraphOps.connectedComponentsStar(edges, driverCutoff = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaDriver == viaGraphX, s"seed=$seed n=$n m=$m (driver)")
-      assert(viaStar == viaGraphX, s"seed=$seed n=$n m=$m (star)")
+      // the forced distributed star rounds must agree with the reference
+      val viaDriver = components(GraphOps.connectedComponents(edges))
+      val viaStar = components(GraphOps.connectedComponents(edges, driverCutoff = 0))
+      assert(viaDriver == want, s"seed=$seed n=$n m=$m (driver)")
+      assert(viaStar == want, s"seed=$seed n=$n m=$m (star)")
     }
   }
 
   test("star CC: isolated-pair and self-referential inputs (both paths)") {
     for (cutoff <- Seq(0, 100000)) {
-      val cc = GraphOps.connectedComponentsStar(
-        Seq((5L, 5L), (7L, 8L)).toDF("src", "dst"), driverCutoff = cutoff)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val cc = components(GraphOps.connectedComponents(
+        Seq((5L, 5L), (7L, 8L)).toDF("src", "dst"), driverCutoff = cutoff))
       // self-loop node keeps its own id; the pair maps to its min
       assert(cc == Map(5L -> 5L, 7L -> 7L, 8L -> 7L), s"cutoff=$cutoff")
     }
@@ -269,13 +256,13 @@ class GraphOpsSpec extends AnyFunSuite {
     // share(leaf) = 850,000 to the center.
     // p1: center 150,000 + 1,700,000 = 1,850,000; leaves 575,000 each.
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
-    val p1 = GraphOps.pageRankIntSync(edges, iters = 1)
+    val p1 = GraphOps.pageRank(edges, iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(p1 == Map(1L -> 1850000L, 2L -> 575000L, 3L -> 575000L))
     // deterministic across runs at depth 5, and the center stays on top
-    val a = GraphOps.pageRankIntSync(edges, iters = 5)
+    val a = GraphOps.pageRank(edges, iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = GraphOps.pageRankIntSync(edges, iters = 5)
+    val b = GraphOps.pageRank(edges, iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
     assert(a(1L) > a(2L) && a(2L) == a(3L))
@@ -303,7 +290,7 @@ class GraphOpsSpec extends AnyFunSuite {
       val edges = (1 to 3 * n).map(_ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2).distinct
-      val got = GraphOps.pageRankIntSync(edges.toDF("src", "dst"), iters = 4)
+      val got = GraphOps.pageRank(edges.toDF("src", "dst"), iters = 4)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val want = ref(edges, 4)
       assert(got == want, s"seed=$seed n=$n")
@@ -367,9 +354,52 @@ class GraphOpsSpec extends AnyFunSuite {
     // 1→2 directed: 2 has no out-edges, so after iter 1 vertex 1 holds
     // only the teleport floor and 2 holds teleport + 1's full damped mass
     val edges = Seq((1L, 2L)).toDF("src", "dst")
-    val p1 = GraphOps.pageRankIntSync(edges, iters = 1)
+    val p1 = GraphOps.pageRank(edges, iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(p1 == Map(1L -> 150000L, 2L -> 1000000L))
+  }
+
+  test("pageRank, labelPropagation and connectedComponents rows do not move with shuffle partitions or AQE") {
+    // one shared session: restore what the loop sets
+    def withConf[T](kv: (String, String)*)(f: => T): T = {
+      val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val settings = for {
+      parts <- Seq(1, 7, 64); aqe <- Seq(true, false)
+    } yield (parts, aqe)
+    for (seed <- Seq(3, 11)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 60
+      // a 20-node path (several star rounds) plus random edges, some
+      // components and many count ties for LPA
+      val es = (0L until 19L).map(i => (i, i + 1)) ++
+        (1 to 50).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+          .filter(e => e._1 != e._2)
+      val edges = es.toDF("src", "dst")
+      val got = settings.map { case (parts, aqe) =>
+        withConf("spark.sql.shuffle.partitions" -> parts.toString,
+            "spark.sql.adaptive.enabled" -> aqe.toString) {
+          (parts, aqe) -> Seq(
+            rows(GraphOps.pageRank(edges, iters = 5)),
+            rows(GraphOps.labelPropagation(edges, iters = 5)),
+            rows(GraphOps.connectedComponents(edges)),
+            rows(GraphOps.connectedComponents(edges, driverCutoff = 0)))
+        }
+      }
+      val (base, want) = got.head
+      assert(want(2) == componentsRef(es).toSeq.sorted, s"seed=$seed")
+      for ((setting, rs) <- got.tail; (name, i) <- Seq(
+          "pageRank", "labelPropagation", "CC driver", "CC star").zipWithIndex)
+        assert(rs(i) == want(i), s"seed=$seed $name at $setting differs from $base")
+    }
   }
 
   test("labelPropagation returns a label per vertex") {

@@ -99,7 +99,7 @@ class InvariantsSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= 2)
       .select("src", "dst")
-    val membership = graft.operators.GraphOps.labelPropagationSync(edges, iters = 5)
+    val membership = graft.operators.GraphOps.labelPropagation(edges, iters = 5)
       .select(col("id"), col("label").as("community"))
     val m = graft.operators.Louvain.modularity(edges, membership)
     info(s"modularity = $m over ${rows.length} communities")

@@ -28,12 +28,12 @@ class EscoCliSpec extends AnyFunSuite {
     "skill-cooccurrence", "skill-depths",
     "top-skills-by-relationships", "top-occupations-optional",
     "transferable-skills", "skill-groups-most-skills",
-    "combined-connections", "pagerank-exact", "hits-exact",
+    "combined-connections", "hits-exact",
     "triangles", "concept-core", "cluster-skills",
     "label-bpe", "label-cardinality", "suggest-relations",
     "description-novelty", "sample-skills", "kind-vocab-similarity",
     // the graph-analytics verbs, on the mini warehouse: wiring smoke for
-    // the GraphX/iterative paths too
+    // the iterative paths too
     "isco-depths", "communities", "betweenness", "pagerank")
 
   analyses.foreach { name =>
@@ -47,7 +47,7 @@ class EscoCliSpec extends AnyFunSuite {
     // every graph verb, without a session, on one loaded warehouse: the
     // way the multi-verb CLI case drives them
     val graphVerbs = Seq("skill-depths", "isco-depths", "communities",
-      "communities-louvain", "pagerank", "pagerank-exact", "hits-exact",
+      "communities-louvain", "pagerank", "hits-exact",
       "triangles", "concept-core", "suggest-relations", "betweenness")
     val rows = graphVerbs.map(n => n -> EscoCli.analyzeOne(wh, n).collect().toSet).toMap
     assert(EscoAnalytics.shortestPathBetweenSkills(wh, "manage data", "communicate") == 2)
@@ -69,7 +69,7 @@ class EscoCliSpec extends AnyFunSuite {
 
   test("multi-verb analyze invocation runs end-to-end") {
     EscoCli.run(spark, List("analyze", whDir,
-      "triangles", "suggest-relations", "pagerank-exact", "hits-exact"))
+      "triangles", "suggest-relations", "pagerank", "hits-exact"))
   }
 
   test("every smoke-tested analysis name is in the multi-verb catalog guard") {
@@ -80,9 +80,9 @@ class EscoCliSpec extends AnyFunSuite {
     // one mistyped verb among valid ones used to fall through to the
     // generic usage blob; the message must name exactly the bad ones
     val msg = EscoCli.unknownVerbMessage(
-      Seq("triangles", "trangles", "pagerank-exact"))
+      Seq("triangles", "trangles", "pagerank"))
     assert(msg.contains("unknown query trangles"))
-    assert(!msg.contains("triangles,") && !msg.contains("pagerank-exact,"))
+    assert(!msg.contains("triangles,") && !msg.contains("pagerank,"))
     val msg2 = EscoCli.unknownVerbMessage(Seq("triangles", "foo", "bar"))
     assert(msg2.contains("unknown queries foo, bar"))
   }
