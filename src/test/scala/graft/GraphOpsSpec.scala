@@ -223,7 +223,7 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(cc.size == 80 && cc.values.forall(_ == 0L))
   }
 
-  test("star CC equals a driver union-find reference across random graph shapes (5 seeds, mixed density)") {
+  test("star CC equals a driver union-find reference on random graphs (5 seeds)") {
     for (seed <- Seq(1, 7, 13, 21, 33)) {
       val rnd = new scala.util.Random(seed)
       val n = 30 + rnd.nextInt(120)
