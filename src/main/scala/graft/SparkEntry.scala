@@ -6950,12 +6950,12 @@ object SparkEntry {
     hierarchyEdges(s, dir).unionByName(custOrder).unionByName(orderPart)
   }
 
-  // Shared graph-lane edge frames: g01/g02/g05/g05b/g06 traverse the same
-  // two edge sets, and each traversal call used to repartition + persist
-  // (+ unpersist) its own copy — at 3 bench passes × 5 lanes that was the
-  // g06 cold-pass cost round 7 flagged. Within one process each
-  // repartition(src)-persisted frame is now declared ONCE per
-  // (session, sf-dir) and reused; persist is lazy, so the first traversal
+  // Shared graph-lane edge frames: the graph lanes traverse a few edge
+  // sets, and the graph operators read the frame they are given without
+  // materializing it (the GraphOps edge contract). Within one process each
+  // frame is declared ONCE per (session, sf-dir) — the traversal inputs
+  // repartitioned on src, so each level's join exchanges only the
+  // frontier — and reused; persist is lazy, so the first traversal
   // that touches it pays the one materialization. A handful of small
   // frames (≤~1 M edge rows at sf0.1) keyed by session: Verify/Bench run
   // one session per process, the test JVM shares one.
@@ -7019,11 +7019,10 @@ object SparkEntry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** g14's prepared undirected adjacency over the co-purchase graph:
-    * the symmetrize + distinct half of linkPrediction, built and
-    * persisted ONCE per (session, sf-dir) — passes 2+ of a bench sweep
-    * (and any second undirected consumer) reuse the materialized frame
-    * via the `adjPrepared` contract instead of re-running it. */
+  /** g11/g14's undirected adjacency over the co-purchase graph
+    * (`GraphOps.undirectedAdjacency`), built and persisted ONCE per
+    * (session, sf-dir): both lanes and every pass of a bench sweep read
+    * the one materialized frame. */
   private def coPurchaseAdj(s: SparkSession, dir: String): DataFrame =
     sharedEdges(s, dir, "copurchase-adj") {
       GraphOps.undirectedAdjacency(coPurchaseEdges(s, dir))
@@ -7043,8 +7042,7 @@ object SparkEntry {
           lit("-bc")).cast("binary")), 1, 8), col("root"))
         .limit(3)
       graft.operators.Betweenness.forwardCounts(
-          dagPart(s, dir), regionRoots.unionByName(nationRoots),
-          maxDepth = 4, edgesPrepared = true)
+          dagPart(s, dir), regionRoots.unionByName(nationRoots), maxDepth = 4)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -7058,8 +7056,7 @@ object SparkEntry {
     "g02_path_counts" -> ((s, dir) => {
       val roots = t(s, dir, "region")
         .select((col("r_regionkey").cast("long") + 1000000L).as("id"))
-      GraphOps.varLengthPaths(hierPart(s, dir), roots, maxDepth = 5,
-          sharedEdges = true)
+      GraphOps.varLengthPaths(hierPart(s, dir), roots, maxDepth = 5)
         .groupBy(col("depth"))
         .agg(count(lit(1)).as("nodes"), sum(col("n_paths")).as("paths"))
         .orderBy(col("depth"))
@@ -7070,8 +7067,7 @@ object SparkEntry {
     "g06_multiparent_paths" -> ((s, dir) => {
       val roots = t(s, dir, "region")
         .select((col("r_regionkey").cast("long") + 1000000L).as("id"))
-      GraphOps.varLengthPaths(dagPart(s, dir), roots, maxDepth = 6,
-          sharedEdges = true)
+      GraphOps.varLengthPaths(dagPart(s, dir), roots, maxDepth = 6)
         .groupBy(col("depth"))
         .agg(count(lit(1)).as("nodes"), sum(col("n_paths")).as("paths"))
         .orderBy(col("depth"))
@@ -7120,8 +7116,7 @@ object SparkEntry {
     // pairs + engine-exact Adamic–Adar (micro-rounded 1/log2 deg terms);
     // the symmetrized adjacency is the shared persisted frame
     "g14_link_prediction" -> ((s, dir) =>
-      GraphOps.linkPrediction(coPurchaseAdj(s, dir), maxNeighbors = 64,
-          adjPrepared = true)
+      GraphOps.linkPrediction(coPurchaseAdj(s, dir), maxNeighbors = 64)
         .orderBy(desc("common_neighbors"), desc("aa_micro"),
           col("node_a"), col("node_b"))
         .limit(20)),
@@ -7167,7 +7162,7 @@ object SparkEntry {
       // engines return an identical EMPTY frame if the part ever drifted
       // out of radius, so the cap cannot desync the hash.
       GraphOps.shortestPathFrame(dagUndirectedPart(s, dir), 1000000L, dst,
-          maxDepth = 4, edgesPrepared = true)
+          maxDepth = 4)
         .orderBy(col("step"))
     }),
     // degree-ordered (compact-forward) triangle counting over the
@@ -7186,7 +7181,7 @@ object SparkEntry {
     // genuinely pins the bounded-round semantics, not just a fixpoint
     // both formulations would reach
     "g11_kcore" -> ((s, dir) => {
-      GraphOps.kCorePeel(coPurchaseEdges(s, dir), k = 3, rounds = 5)
+      GraphOps.kCorePeel(coPurchaseAdj(s, dir), k = 3, rounds = 5)
         .orderBy(col("id"))
     }),
     // FULL-oracle HITS (hubs & authorities): deterministic synchronous
@@ -7440,7 +7435,7 @@ object SparkEntry {
     // the backward phase in integer micro-units: per level d,
     // delta_d(v) = SUM over DAG successors w of
     // (sigma_v * (1000000 + delta_{d+1}(w))) // sigma_w — exactly
-    // Betweenness.betweennessIntSync's floor-div recurrence; depth-0
+    // Betweenness.betweennessIntFromForward's floor-div recurrence; depth-0
     // roots excluded, zero rows filtered
     "g05c_betweenness_int" -> {
       val back = (d: Int) =>
@@ -9689,8 +9684,7 @@ object SparkEntry {
     }),
     "g05_betweenness" -> ((s, dir) => {
       graft.operators.Betweenness.approx(
-          hierUndirectedPart(s, dir), k = 8, seed = 42L, maxDepth = 6,
-          edgesPrepared = true)
+          hierUndirectedPart(s, dir), k = 8, seed = 42L, maxDepth = 6)
         .orderBy(desc("betweenness"), col("id"))
         .limit(20)
     }),

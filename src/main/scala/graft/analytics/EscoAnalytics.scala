@@ -2,7 +2,6 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.GraftFunctions
 import graft.operators.{GraphOps, Vertices}
@@ -326,24 +325,14 @@ object EscoAnalytics {
     shortestPathNodes(wh, label1, label2).size - 1
 
   /** Full G2 semantics: the shortest path's node labels in order (the
-    * Cypher query returns the path object; `analysis_queries.md:138-141`).
-    * The warehouse session's id edges ([[GraphSession.edges]], shared
-    * with PageRank) are symmetrized, partitioned on `src` and persisted
-    * for the call ([[GraphOps.shortestPath]]'s `edgesPrepared` contract):
-    * every BFS level probes them instead of re-deriving their union, and
-    * its join exchanges only the frontier, because the cached scan keeps
-    * the `src` partitioning, which a checkpoint would not. */
+    * Cypher query returns the path object; `analysis_queries.md:138-141`),
+    * a BFS over the warehouse session's symmetric adjacency
+    * ([[GraphSession.adjacency]]). */
   def shortestPathNodes(
       wh: EscoWarehouse, label1: String, label2: String): Seq[String] = {
     val (from, to) = idsOfSkillLabels(wh, label1, label2)
     val session = wh.session
-    val e = session.edges
-    val undirected = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ids =
-      try GraphOps.shortestPath(undirected, from, to, maxDepth = 15, edgesPrepared = true)
-      finally undirected.unpersist(blocking = false)
+    val ids = GraphOps.shortestPath(session.adjacency, from, to, maxDepth = 15)
     val labelById = session.vertices
       .filter(col("id").isin(ids: _*))
       .select(col("id"), col("preferredLabel"))
@@ -450,8 +439,9 @@ object EscoAnalytics {
     * symmetrized simple adjacency over it, the related-skill adjacency
     * and the two all-nodes profile frames are each materialized AT MOST
     * once (localCheckpoint — every frame has several downstream
-    * consumers) instead of once per verb — the `adjPrepared` discipline
-    * `GraphOps.linkPrediction` / `kCorePeel` honor. A session constructed
+    * consumers) instead of once per verb: the graph operators read the
+    * frame they are given and never materialize it themselves (the
+    * `GraphOps` edge contract). A session constructed
     * over `wh` is independent of `wh.session`; [[topBetweenness]] and
     * [[topTriangles]] accept one in its place. The `*Builds` counters
     * exist so EscoCliSpec can pin the build-once contract. */
@@ -484,9 +474,9 @@ object EscoAnalytics {
       graphBuilds += 1
       idEdges(wh.allEdges, "srcUri", "dstUri").localCheckpoint(true)
     }
-    /** `undirectedAdjacency` over the long-id edges — the
-      * linkPrediction/kCorePeel `adjPrepared` shape, shared by
-      * triangles + concept-core (+ any future undirected verb). */
+    /** `undirectedAdjacency` over the long-id edges: the one undirected
+      * (src, dst) graph every undirected verb reads (shortest path,
+      * betweenness, triangles, concept core). */
     lazy val adjacency: DataFrame = {
       adjacencyBuilds += 1
       GraphOps.undirectedAdjacency(edges).localCheckpoint(true)
@@ -542,16 +532,14 @@ object EscoAnalytics {
   /** Triangle-participation top-N over the full graph — graph-cohesion
     * centrality beyond the reference catalog ([[GraphOps.triangles]],
     * degree-ordered wedge join, hub-skew-immune), over the session's
-    * symmetric adjacency: orientEdges canonicalizes it to the same simple
-    * edge set as the raw edges. `session` replaces `wh.session` with a
+    * symmetric adjacency. `session` replaces `wh.session` with a
     * caller's own [[GraphSession]] over `wh`. */
   def topTriangles(
       wh: EscoWarehouse,
       n: Int = 20,
       session: Option[GraphSession] = None): DataFrame = {
     val s = session.getOrElse(wh.session)
-    s.labeled(GraphOps.triangleParticipation(
-        s.adjacency.select(col("a").as("src"), col("b").as("dst"))))
+    s.labeled(GraphOps.triangleParticipation(s.adjacency))
       .select(col("uri"), col("preferredLabel"), col("n_triangles"))
       .orderBy(desc("n_triangles"), col("uri"))
       .limit(n)
@@ -566,7 +554,7 @@ object EscoAnalytics {
     * only when the bounded-round mid-peel view is wanted. */
   def conceptCore(wh: EscoWarehouse, k: Int = 3, rounds: Int = 100): DataFrame = {
     val s = wh.session
-    s.labeled(GraphOps.kCorePeel(s.adjacency, k, rounds, adjPrepared = true))
+    s.labeled(GraphOps.kCorePeel(s.adjacency, k, rounds))
       .select(col("uri"), col("preferredLabel"), col("core_degree"))
       .orderBy(desc("core_degree"), col("uri"))
   }
@@ -710,8 +698,7 @@ object EscoAnalytics {
       .distinct()
     val labels = wh.skills.select(col("conceptUri"), col("preferredLabel"))
     val predicted = graft.operators.GraphOps.linkPrediction(
-      wh.session.relatedSkillAdjacency,
-      maxNeighbors = 64, adjPrepared = true)
+      wh.session.relatedSkillAdjacency, maxNeighbors = 64)
     predicted
       .join(existing, Seq("node_a", "node_b"), "left_anti")
       .join(labels.select(col("conceptUri").as("node_a"),
@@ -728,15 +715,16 @@ object EscoAnalytics {
 
   /** Betweenness centrality top-N over the full graph (G4,
     * `analysis_queries.md:221-227`) — sampled Brandes; the reference's GDS
-    * call is exact, divergence documented (SURVEY §7.5). `session`
-    * replaces `wh.session` with a caller's own [[GraphSession]] over `wh`. */
+    * call is exact, divergence documented (SURVEY §7.5); undirected, over
+    * the session's symmetric adjacency. `session` replaces `wh.session`
+    * with a caller's own [[GraphSession]] over `wh`. */
   def topBetweenness(
       wh: EscoWarehouse,
       n: Int = 20,
       sampleK: Int = 16,
       session: Option[GraphSession] = None): DataFrame = {
     val s = session.getOrElse(wh.session)
-    s.labeled(graft.operators.Betweenness.approx(s.edges, k = sampleK))
+    s.labeled(graft.operators.Betweenness.approx(s.adjacency, k = sampleK))
       .select(col("uri"), col("preferredLabel"),
         col("betweenness"), col("scaled"))
       .orderBy(desc("betweenness"), col("uri"))

@@ -16,9 +16,6 @@ object TextFunctions {
   /** Whitespace tokens of lower-cased, trimmed text. */
   def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
 
-  /** Raw (case-preserving) whitespace tokens. */
-  def rawTokens(text: Column): Column = split(trim(text), "\\s+")
-
   /** Overlapping word n-grams of [[tokens]] as space-joined strings —
     * `array<string>` of length `size(tokens) - n + 1` (empty below n
     * tokens). SQL twin (DuckDB): `list_transform(range(1, len(ts)-n+2),
@@ -74,10 +71,6 @@ object TextFunctions {
     * double round-trip and hence no 2^53 precision cliff. */
   private[graft] def ldiv(a: Column, b: Column): Column =
     call_function("div", a, b)
-
-  /** Words per 1000 chars, integer (deterministic across engines). */
-  def wordDensityPermille(text: Column): Column =
-    ldiv(tokenCount(text) * lit(1000L), greatest(charCount(text), lit(1L)))
 
   private val stopwordsEn = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",

@@ -38,43 +38,21 @@ object Betweenness {
     * Keep `maxDepth` bounded on dense layered graphs; the sampled
     * [[approx]] shares the recurrence and the same bound.
     *
+    * @param edges (src, dst), traversed as given: pass
+    *        `GraphOps.undirectedAdjacency` for undirected betweenness.
+    *        Duplicate edges would inflate sigma.
     * @param sources one `root` column; caller controls the sampling (use a
     *        portable hash order if an external oracle must re-derive it)
-    * @param edgesPrepared the caller vouches `edges` is ALREADY
-    *        direction-expanded as required, duplicate-free (duplicates
-    *        would inflate sigma) and materialized (persisted or
-    *        checkpointed) — e.g. one shared frame reused across several
-    *        graph operators in a bench process; skips the per-call
-    *        distinct + localCheckpoint. `directed` is ignored then.
     */
   def forwardCounts(
       edges: DataFrame,
       sources: DataFrame,
-      maxDepth: Int = 20,
-      directed: Boolean = false,
-      edgesPrepared: Boolean = false): DataFrame =
-    forwardPhase(prepareEdges(edges, directed, edgesPrepared),
+      maxDepth: Int = 20): DataFrame =
+    forwardPhase(edges.select(col("src"), col("dst")),
       sources.select(col("root").cast("long").as("root")), maxDepth)._1
 
-  /** The one definition of the traversal edge contract shared by
-    * [[forwardCounts]] and [[approx]]: long-cast, direction-expanded,
-    * duplicate-free, materialized — or taken as-is when the caller
-    * vouches for exactly that via `edgesPrepared`. */
-  private def prepareEdges(
-      edges: DataFrame, directed: Boolean, edgesPrepared: Boolean): DataFrame =
-    if (edgesPrepared) edges.select(col("src"), col("dst"))
-    else {
-      val e0 = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      (if (directed) e0
-        else e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst"))))
-        .distinct()
-        .localCheckpoint()
-    }
-
   /** Shared forward BFS: returns (visited frame, per-level (root,id,sigma)
-    * frames, levels present deepest-first). `e` must already be directed,
-    * distinct and checkpointed. */
+    * frames, levels present deepest-first) over the (src, dst) frame `e`. */
   private def forwardPhase(
       e: DataFrame,
       sources: DataFrame,
@@ -119,8 +97,9 @@ object Betweenness {
     (visited, levelAcc.toMap, levels)
   }
 
-  /** Integer-exact (micro-unit) Brandes dependency accumulation over the
-    * given roots — the engine-portable twin of [[approx]]'s backward
+  /** Integer-exact (micro-unit) Brandes dependency accumulation over a
+    * PRECOMPUTED forward frame (root, id, depth, sigma) from
+    * [[forwardCounts]] — the engine-portable twin of [[approx]]'s backward
     * phase, by the same fixed-point trick as `GraphOps.pageRank`:
     * a predecessor's per-edge contribution is
     * `(sigma_v * (1_000_000 + delta_w)) DIV sigma_w` — every operand a
@@ -129,7 +108,10 @@ object Betweenness {
     * per-level CTEs, where the float phase's double-sum order never
     * could. Each floored term loses < 1 micro-unit vs the true rational;
     * the contract is exact REPLAY, not the textbook real number (the
-    * float `approx` stays the statistical estimator).
+    * float `approx` stays the statistical estimator). `e` is the edge
+    * frame the forward ran on; a caller that also needs the forward
+    * counts (the g05b/g05c lane pair) runs ONE forward BFS and feeds
+    * both.
     *
     * Returns (id, bc_micro), bc_micro > 0: per-root dependencies summed,
     * endpoints excluded (a traversal's own root never accumulates).
@@ -137,23 +119,6 @@ object Betweenness {
     * sigma · paths-through-node ≲ 9e12 — far past what this depth cap
     * admits on any realistic graph.
     */
-  def betweennessIntSync(
-      edges: DataFrame,
-      sources: DataFrame,
-      maxDepth: Int = 20,
-      directed: Boolean = false,
-      edgesPrepared: Boolean = false): DataFrame = {
-    val e = prepareEdges(edges, directed, edgesPrepared)
-    val (visited, _, _) =
-      forwardPhase(e, sources.select(col("root").cast("long").as("root")), maxDepth)
-    betweennessIntFromForward(visited, e)
-  }
-
-  /** [[betweennessIntSync]]'s backward half over a PRECOMPUTED forward
-    * frame (root, id, depth, sigma) — lets a caller that also needs the
-    * forward counts (the g05b/g05c lane pair) run ONE forward BFS and
-    * feed both; `e` must satisfy the [[prepareEdges]] contract (the
-    * exact edge frame the forward ran on). */
   def betweennessIntFromForward(forward: DataFrame, e: DataFrame): DataFrame = {
     val spark = forward.sparkSession
     val maxD = forward
@@ -244,7 +209,8 @@ object Betweenness {
             col("sum_depth"))).otherwise(0L).as("closeness_micro"),
         col("harmonic_micro"))
 
-  /** @param edges (src, dst) long ids; treated per `directed`
+  /** @param edges (src, dst) long ids, traversed as given (see
+    *        [[forwardCounts]])
     * @param k number of sampled sources (all vertices if k >= |V|)
     * @return (id, betweenness, scaled, bc_a, bc_b) — `scaled` multiplies
     *         by |V|/k to estimate the full sum; directed-path convention
@@ -259,13 +225,9 @@ object Betweenness {
       edges: DataFrame,
       k: Int = 16,
       seed: Long = 42L,
-      maxDepth: Int = 20,
-      directed: Boolean = false,
-      edgesPrepared: Boolean = false): DataFrame = {
+      maxDepth: Int = 20): DataFrame = {
     val spark = edges.sparkSession
-    // edgesPrepared: see [[forwardCounts]] — caller-shared frame, already
-    // expanded/distinct/materialized; `directed` is ignored then
-    val e = prepareEdges(edges, directed, edgesPrepared)
+    val e = edges.select(col("src"), col("dst"))
 
     val vertices = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
@@ -273,7 +235,7 @@ object Betweenness {
     // eByDst materialization gate below) fetch in ONE action — a tagged
     // union of two 1-row aggs whose branches run as concurrent stages of
     // one job (§2.6, the nbCandidates shape) instead of two sequential
-    // driver round trips over the same checkpointed edge frame
+    // driver round trips over the same edge frame
     val counts = e.agg(count(lit(1)).as("__x"))
       .select(lit("e").as("__k"), col("__x"))
       .unionAll(vertices.agg(count(lit(1)).as("__x"))

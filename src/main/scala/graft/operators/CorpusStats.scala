@@ -967,22 +967,6 @@ object CorpusStats {
           .as("share_micro"))
   }
 
-  /** Document frequency of word `n`-grams, keyed by 64-bit shingle hash
-    * (gram strings never shuffle; collisions are 64-bit-improbable, the
-    * same contract as [[Dedup.ngramJaccard]]). */
-  def ngramDocFreq(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      nGram: Int): DataFrame =
-    docs
-      .select(
-        col(idCol),
-        explode(TextFunctions.tokenNgrams(col(textCol), nGram)).as("gram"))
-      .select(col(idCol), xxhash64(col("gram")).as("gh"))
-      .distinct()
-      .groupBy("gh").agg(count(lit(1)).as("df"))
-
   /** Per-document boilerplate signal: how much of a document is made of
     * word `n`-grams that occur in at least `minDf` distinct documents.
     * High permille = templated/boilerplate text (site chrome, license

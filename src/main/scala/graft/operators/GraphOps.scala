@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph traversal and analytics over edge DataFrames.
   *
@@ -19,6 +18,17 @@ import org.apache.spark.storage.StorageLevel
   * integer arithmetic and smallest-id tie-breaks so results do not move
   * with partition count or core count, and one implementation per
   * algorithm.
+  *
+  * Edge contract: an operator reads its `(src, dst)` edge frame as given.
+  * It never symmetrizes, de-duplicates, persists, checkpoints or
+  * unpersists that frame, so a traversal follows exactly the rows it is
+  * handed: pass [[undirectedAdjacency]] for the undirected simple graph.
+  * A caller that hands one frame to several traversals, or to an operator
+  * that scans it once per round, materializes it first (the loaded
+  * warehouse keeps its adjacency that way). The whole-graph algorithms
+  * whose result is defined on the simple graph (connected components,
+  * label propagation, PageRank, HITS, triangles) derive their own working
+  * frame from the input and materialize that.
   *
   * Edge DataFrames use long vertex ids. For string-keyed graphs (URIs)
   * map each key with `Vertices.id` and run `Vertices.assertNoCollisions`
@@ -73,21 +83,8 @@ object GraphOps {
   def varLengthPaths(
       edges: DataFrame,
       roots: DataFrame,
-      maxDepth: Int = 20,
-      sharedEdges: Boolean = false): DataFrame = {
-    // pre-partition the edge side on the join key ONCE and persist: the
-    // cached InMemoryTableScan reports hashpartitioning(src), so every
-    // level's join re-shuffles only the (small, shrinking) frontier, not
-    // the full edge set — O(1) edge shuffles for the whole traversal
-    // instead of O(depth). `sharedEdges = true` says the caller already
-    // did exactly that (a repartition(src)-persisted frame reused across
-    // several traversals — the bench's graph lanes share one), so this
-    // call must neither re-persist nor unpersist it.
-    val e =
-      if (sharedEdges) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      maxDepth: Int = 20): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
     val spark = edges.sparkSession
     var result: DataFrame = null
     var frontier = roots
@@ -111,8 +108,6 @@ object GraphOps {
       result = if (result == null) step else result.unionByName(step)
       frontier = next.select("root", "id", "n_paths")
     }
-    if (!sharedEdges)
-      e.unpersist(blocking = false) // levels are checkpointed; lineage no longer needs e
     if (result == null)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -124,9 +119,10 @@ object GraphOps {
     else result
   }
 
-  /** Undirected single-pair shortest path WITH the node sequence (full G2
-    * Cypher semantics — `shortestPath((a)-[*]-(b))` returns a path, not a
-    * length; `analysis_queries.md:138-141`). BFS with parent tracking,
+  /** Single-pair shortest path WITH the node sequence (full G2 Cypher
+    * semantics — `shortestPath((a)-[*]-(b))` returns a path, not a
+    * length; `analysis_queries.md:138-141`; undirected over
+    * [[undirectedAdjacency]]). BFS along `edges` with parent tracking,
     * then a driver walk over the ≤depth-sized parent chain (a single
     * path's length is bounded by the BFS depth cap, so the driver-side
     * reconstruction is O(depth) lookups against a filtered frontier, not a
@@ -135,18 +131,10 @@ object GraphOps {
       edges: DataFrame,
       srcId: Long,
       dstId: Long,
-      maxDepth: Int = 20,
-      edgesPrepared: Boolean = false): Seq[Long] = {
+      maxDepth: Int = 20): Seq[Long] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // edgesPrepared: the caller vouches `edges` is ALREADY symmetric
-    // (dst→src union done) and partitioned/persisted on src — the
-    // forwardCounts convention — so each level's join exchanges only
-    // the frontier side instead of re-symmetrizing the graph per call
-    val e =
-      if (edgesPrepared) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val e = edges.select(col("src"), col("dst"))
     var visited = Seq((srcId, 0, -1L)).toDF("id", "depth", "parent")
       .localCheckpoint()
     var frontier = visited
@@ -215,11 +203,10 @@ object GraphOps {
       edges: DataFrame,
       srcId: Long,
       dstId: Long,
-      maxDepth: Int = 20,
-      edgesPrepared: Boolean = false): DataFrame = {
+      maxDepth: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    shortestPath(edges, srcId, dstId, maxDepth, edgesPrepared)
+    shortestPath(edges, srcId, dstId, maxDepth)
       .zipWithIndex
       .map { case (id, i) => (i, id) }
       .toDF("step", "id")
@@ -351,30 +338,19 @@ object GraphOps {
         coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Canonical simple-graph symmetrized adjacency (a, b) as a PLAN —
-    * self-loops and duplicate/reversed edges collapsed, both directions
-    * emitted, NOT materialized. The ONE undirected-simple-graph
-    * definition: labelPropagation, kCorePeel and linkPrediction must
-    * not drift. Public so a caller running several undirected operators
-    * over the same graph can persist this once and pass it back in via
-    * the prepared-adjacency contract ([[linkPrediction]]'s
-    * `adjPrepared` — the same build-once discipline as
-    * [[graft.operators.Betweenness.forwardCounts]]'s `edgesPrepared`). */
+  /** The undirected simple graph of `edges` as a symmetric (src, dst)
+    * PLAN: self-loops and duplicate or reversed edges collapsed, both
+    * directions emitted, NOT materialized. The ONE undirected-simple-graph
+    * definition: every undirected caller builds its adjacency here, so
+    * the operators cannot drift apart. */
   def undirectedAdjacency(edges: DataFrame): DataFrame = {
     val simple = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .filter(col("src") =!= col("dst"))
       .distinct()
-    simple.unionByName(simple.select(col("b").as("a"), col("a").as("b")))
+    simple.unionByName(simple.select(col("dst").as("src"), col("src").as("dst")))
   }
-
-  /** [[undirectedAdjacency]] behind a lazy localCheckpoint (every
-    * synchronous-round operator re-joins it per round); `eager` for
-    * callers with several immediate consumers. */
-  private def symmetricAdjacency(
-      edges: DataFrame, eager: Boolean = false): DataFrame =
-    undirectedAdjacency(edges).localCheckpoint(eager)
 
   /** Label propagation communities (LPA, `iters` synchronous supersteps)
     * → (id, label); stands in for the reference's GDS Louvain (SURVEY G5
@@ -399,19 +375,20 @@ object GraphOps {
     * edge endpoints; an isolated vertex or a self-loop-only vertex has no
     * row. */
   def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame = {
-    val adj = symmetricAdjacency(edges)
-    var labels = adj.select(col("a").as("id")).distinct()
+    // every superstep re-joins the adjacency: materialized once, lazily
+    val adj = undirectedAdjacency(edges).localCheckpoint(false)
+    var labels = adj.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     for (_ <- 1 to iters) {
       labels = adj
-        .join(labels.select(col("id").as("b"), col("label")), Seq("b"))
-        .groupBy(col("a"), col("label"))
+        .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
+        .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("c"))
         // argmax as a partial-aggregable min(struct): highest count, then
         // lowest label — never a per-vertex sort window
-        .groupBy(col("a"))
+        .groupBy(col("src"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("best"))
-        .select(col("a").as("id"), col("best.l").as("label"))
+        .select(col("src").as("id"), col("best.l").as("label"))
         .localCheckpoint(false)
     }
     labels
@@ -630,27 +607,21 @@ object GraphOps {
     * same unrolled-CTE replay as [[labelPropagation]] /
     * [[pageRank]]; a run-to-fixpoint loop's round count is
     * data-dependent and an oracle could not know where to stop.
-    * Per round: two joins of the lazily-checkpointed adjacency against
-    * the id-only survivor set + one count — nothing wider than a long
-    * ever shuffles, and the adjacency is built once.
-    *
-    * `adjPrepared`: the caller vouches `edges` is ALREADY the
-    * symmetrized simple adjacency in [[undirectedAdjacency]]'s (a, b)
-    * shape and persisted — the same share-one-adjacency contract as
-    * [[linkPrediction]]. */
+    * Per round: two joins of `edges` (the symmetric simple graph,
+    * [[undirectedAdjacency]]) against the id-only survivor set + one
+    * count — nothing wider than a long ever shuffles. */
   def kCorePeel(
       edges: DataFrame,
       k: Int,
-      rounds: Int = 5,
-      adjPrepared: Boolean = false): DataFrame = {
+      rounds: Int = 5): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    val adj = if (adjPrepared) edges else symmetricAdjacency(edges)
+    val adj = edges.select(col("src"), col("dst"))
     def coreDegrees(survivors: DataFrame): DataFrame = adj
-      .join(survivors.select(col("id").as("a")), Seq("a"))
-      .join(survivors.select(col("id").as("b")), Seq("b"))
-      .groupBy(col("a"))
+      .join(survivors.select(col("id").as("src")), Seq("src"))
+      .join(survivors.select(col("id").as("dst")), Seq("dst"))
+      .groupBy(col("src"))
       .agg(count(lit(1)).as("core_degree"))
-    var survivors = adj.select(col("a").as("id")).distinct()
+    var survivors = adj.select(col("src").as("id")).distinct()
       .localCheckpoint(false)
     var lastDegrees: Option[DataFrame] = None
     var n = survivors.count()
@@ -659,7 +630,7 @@ object GraphOps {
     while (r < rounds && !converged && n > 0) {
       val next = coreDegrees(survivors)
         .filter(col("core_degree") >= k)
-        .select(col("a").as("id"), col("core_degree"))
+        .select(col("src").as("id"), col("core_degree"))
         .localCheckpoint(false)
       val m = next.count()
       // peeling is monotone: an unchanged COUNT means an unchanged SET —
@@ -682,11 +653,12 @@ object GraphOps {
         // fall out of the inner joins) — the SQL replay behaves
         // identically.
         coreDegrees(survivors)
-          .select(col("a").as("id"), col("core_degree"))
+          .select(col("src").as("id"), col("core_degree"))
     }
   }
 
-  /** Link-prediction features over the undirected graph: for every
+  /** Link-prediction features over the undirected graph `edges` (the
+    * symmetric simple graph, [[undirectedAdjacency]]): for every
     * candidate pair (two non-adjacent-or-adjacent nodes sharing ≥ 1
     * common neighbor), the common-neighbor count and the Adamic–Adar
     * score (Σ over shared neighbors w of 1/log2 deg(w) — log2, the
@@ -710,24 +682,13 @@ object GraphOps {
     * of bucket min-k's is the global min-k, so the result is identical
     * to the single-window plan.
     *
-    * `adjPrepared`: the caller vouches `edges` is ALREADY the
-    * symmetrized simple adjacency in [[undirectedAdjacency]]'s (a, b)
-    * shape — build it once, persist it, and share it across
-    * linkPrediction / triangles-style consumers instead of paying the
-    * distinct + union per call.
-    *
     * Output: (node_a, node_b, common_neighbors, aa_micro),
     * node_a < node_b. */
   def linkPrediction(
       edges: DataFrame,
-      maxNeighbors: Int = 64,
-      adjPrepared: Boolean = false): DataFrame = {
+      maxNeighbors: Int = 64): DataFrame = {
     require(maxNeighbors >= 2, s"maxNeighbors=$maxNeighbors")
-    // the ONE undirected-simple-graph definition; eagerly materialized
-    // when built here (three consumers below: degrees + both self-join
-    // sides) — a prepared caller already persisted its copy
-    val adj = (if (adjPrepared) edges else symmetricAdjacency(edges, eager = true))
-      .select(col("a").as("u"), col("b").as("v"))
+    val adj = edges.select(col("src").as("u"), col("dst").as("v"))
     val deg = adj.groupBy(col("u"))
       .agg(count(lit(1)).as("deg"))
     import org.apache.spark.sql.expressions.Window

@@ -30,22 +30,17 @@ import org.apache.spark.sql.functions._
   */
 object Louvain {
 
-  /** @param edges (src, dst) — undirected simple edges
+  /** @param edges (src, dst), read as undirected: self-loops and
+    *        duplicate or reversed edges collapse
+    *        ([[GraphOps.undirectedAdjacency]])
     * @return (id, community) */
   def run(
       edges: DataFrame,
       sweepsPerLevel: Int = 8,
       levels: Int = 2): DataFrame = {
-    // canonical simple undirected edges → symmetric adjacency, w=1 each way
-    val simple = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    var adj = simple
-      .select(col("a").as("src"), col("b").as("dst"), lit(1.0).as("w"))
-      .unionByName(simple.select(col("b").as("src"), col("a").as("dst"),
-        lit(1.0).as("w")))
+    // the simple undirected graph, w=1 each way
+    var adj = GraphOps.undirectedAdjacency(edges)
+      .withColumn("w", lit(1.0))
       .localCheckpoint()
 
     var membership: DataFrame = adj.select(col("src").as("id")).distinct()

@@ -31,23 +31,6 @@ object Similarity {
       .orderBy(desc("score"), col(idCol))
       .limit(k)
 
-  /** Cosine built ONLY from Spark's higher-order functions — an
-    * implementation deliberately independent of the codegen'd
-    * `cosine_sim` Catalyst expression, for `*_check` verification columns
-    * in the rows-only catalog queries (the two paths agreeing pins the
-    * scoring semantics end-to-end). Same zero-norm convention (score 0).
-    * Not for hot paths: `cosine_sim` is the fast lane. */
-  def cosineSqlPath(a: Column, b: Column): Column = {
-    def sq(v: Column) = aggregate(v, lit(0.0d),
-      (acc, x) => acc + x.cast("double") * x.cast("double"))
-    val dot = aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0d), (acc, v) => acc + v)
-    val na = sqrt(sq(a))
-    val nb = sqrt(sq(b))
-    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot / (na * nb))
-  }
-
   /** Exact top-k for a (small, broadcastable) set of query rows.
     * Output: (query id, corpus id, score, rank<=k). */
   def crossTopK(

@@ -1,16 +1,21 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Betweenness
+import graft.operators.{Betweenness, GraphOps}
 
 class BetweennessSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  private def undirected(edges: Seq[(Long, Long)]): DataFrame =
+    GraphOps.undirectedAdjacency(edges.toDF("src", "dst"))
+
+  /** Undirected betweenness of `edges`: approx over their adjacency. */
   private def bc(edges: Seq[(Long, Long)], k: Int = 100): Map[Long, Double] =
-    Betweenness.approx(edges.toDF("src", "dst"), k = k)
+    Betweenness.approx(undirected(edges), k = k)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   test("path graph 1-2-3: middle vertex carries all dependency") {
@@ -79,39 +84,37 @@ class BetweennessSpec extends AnyFunSuite {
     vertices.map(v => v -> bc(v)).toMap
   }
 
-  test("betweennessIntSync: closed forms in exact micro-units") {
+  /** Exact-int Brandes from `root` over `edges` as given: one forward
+    * BFS, then the backward recurrence over the same frame. */
+  private def bcMicro(edges: DataFrame, root: Long): Map[Long, Long] =
+    Betweenness.betweennessIntFromForward(
+        Betweenness.forwardCounts(edges, Seq(root).toDF("root")), edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("forwardCounts + betweennessIntFromForward: closed forms in micro-units") {
     // directed path 1->2->3, root 1: delta(2) = (1*(1e6+0)) div 1 = 1e6
     val path = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val m1 = Betweenness.betweennessIntSync(path, Seq(1L).toDF("root"),
-        directed = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val m1 = bcMicro(path, 1L)
     assert(m1 == Map(2L -> 1000000L))
     // diamond 1->{2,3}->4, root 1: sigma(4)=2, so each middle vertex
     // carries (1*(1e6+0)) div 2 = 500000 — the equal split, floored
     val diamond = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))
       .toDF("src", "dst")
-    val m2 = Betweenness.betweennessIntSync(diamond, Seq(1L).toDF("root"),
-        directed = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val m2 = bcMicro(diamond, 1L)
     assert(m2 == Map(2L -> 500000L, 3L -> 500000L))
     // chain through the diamond 1->{2,3}->4->5: delta(4) = (2*(1e6+0))
     // div 2 = 1e6 (relays 5, sigma ratio 2/2); the middles each get
     // (1*(1e6+1e6)) div 2 = 1e6 — true Brandes (1/2)(1+1) = 1 exactly
     val deep = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
       .toDF("src", "dst")
-    val m3 = Betweenness.betweennessIntSync(deep, Seq(1L).toDF("root"),
-        directed = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val m3 = bcMicro(deep, 1L)
     assert(m3 == Map(2L -> 1000000L, 3L -> 1000000L, 4L -> 1000000L))
     // single edge 1->2, root 1: max BFS depth is exactly 1 — no interior
     // nodes, so the exact-int backward phase must return the EMPTY frame
     // (regression: the accumulator is only populated at depth >= 1 and a
     // maxD == 1 run used to dereference it null)
     val edge = Seq((1L, 2L)).toDF("src", "dst")
-    val m4 = Betweenness.betweennessIntSync(edge, Seq(1L).toDF("root"),
-        directed = true)
-      .collect()
-    assert(m4.isEmpty)
+    assert(bcMicro(edge, 1L).isEmpty)
   }
 
   test("closenessFromForward: closed forms on a path") {
@@ -145,23 +148,24 @@ class BetweennessSpec extends AnyFunSuite {
       } yield (base + a, base + b))
     }.toMap
     val all = perGraph.values.flatten.toSeq
-    val got = Betweenness.approx(all.toDF("src", "dst"), k = 1000000)
+    val got = Betweenness.approx(undirected(all), k = 1000000)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for ((g, es) <- perGraph if es.nonEmpty; (v, want) <- localBrandes(es)) {
       assert(math.abs(got(v) - want) < 1e-9,
         s"graph $g vertex $v: got ${got(v)}, want $want")
     }
     // scaled == raw when every vertex is a source
-    val scaledEq = Betweenness.approx(all.toDF("src", "dst"), k = 1000000)
+    val scaledEq = Betweenness.approx(undirected(all), k = 1000000)
       .filter(abs(col("betweenness") - col("scaled")) > lit(1e-12)).count()
     assert(scaledEq == 0L)
   }
 
   test("directed mode: edges are not symmetrised (path 1->2->3 gives bc(2)=1)") {
-    // undirected counts the (1,3) pair from both endpoints (bc(2)=2);
-    // directed only the 1->3 direction exists
+    // edges are traversed as given: the undirected adjacency counts the
+    // (1,3) pair from both endpoints (bc(2)=2), the directed path only
+    // has the 1->3 direction
     val m = Betweenness.approx(
-      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), k = 100, directed = true)
+      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), k = 100)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(m(2L) == 1.0)
     assert(m(1L) == 0.0 && m(3L) == 0.0)
@@ -201,8 +205,7 @@ class BetweennessSpec extends AnyFunSuite {
         .filter(e => e._1 != e._2).distinct
       val roots = rnd.shuffle((0L until n.toLong).toList).take(3)
       val got = Betweenness.forwardCounts(
-          edges.toDF("src", "dst"), roots.toDF("root"),
-          maxDepth = 6, directed = true)
+          edges.toDF("src", "dst"), roots.toDF("root"), maxDepth = 6)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getInt(2), r.getLong(3))))
         .toMap
@@ -211,8 +214,7 @@ class BetweennessSpec extends AnyFunSuite {
   }
 
   test("sampling: k=2 of a path still ranks the middle highest, scaled") {
-    val m = Betweenness.approx(
-      Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), k = 2, seed = 7L)
+    val m = Betweenness.approx(undirected(Seq((1L, 2L), (2L, 3L))), k = 2, seed = 7L)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     // scaled = raw * 3/2
     m.foreach { case (_, (raw, scaled)) =>

@@ -113,6 +113,29 @@ class CatalogGapsSpec extends AnyFunSuite {
     assert(r.getAs[scala.collection.Seq[String]]("skill_groups").isEmpty)
   }
 
+  test("occupationCompleteProfile: sorted (skill, type) structs, [] when none") {
+    val anchors = wh.occupations.select(col("conceptUri").as("uri"))
+    val profile = Profiles.occupationCompleteProfile(wh, anchors)
+    for (c <- Seq("essential_skills", "optional_skills")) {
+      val item = profile.schema(c).dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      assert(item.fieldNames.toSeq == Seq("skill", "type"), c)
+    }
+    val rows = profile.collect().map { r =>
+      def pairs(c: String) = r.getAs[scala.collection.Seq[Row]](c)
+        .map(x => (x.getString(0), x.getString(1))).toSeq
+      r.getAs[String]("uri") -> ((pairs("essential_skills"), pairs("optional_skills")))
+    }.toMap
+    assert(rows == Map(
+      "o1" -> ((Seq(("manage data", "Essential")),
+        Seq(("communicate", "Optional"), ("spark internals", "Optional")))),
+      "o2" -> ((Seq(("communicate", "Essential"), ("manage data", "Essential")),
+        Seq.empty[(String, String)])),
+      "o3" -> ((Seq(("manage data", "Essential"), ("spark internals", "Essential")),
+        Seq.empty[(String, String)]))))
+  }
+
   test("skillTwoHopNetwork: seven typed collections in one plan") {
     val anchors = wh.skills.filter(col("conceptUri") === "s1")
       .select(col("conceptUri").as("uri"))

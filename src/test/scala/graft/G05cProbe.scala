@@ -103,8 +103,7 @@ object G05cProbe {
     val e = edges.repartition(32, col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val fwd = time("forward (shared, persisted)") {
-      val f = Betweenness.forwardCounts(e, roots, maxDepth = 4,
-        edgesPrepared = true)
+      val f = Betweenness.forwardCounts(e, roots, maxDepth = 4)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       f.count()
       f

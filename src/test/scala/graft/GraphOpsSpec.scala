@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{GraphOps, Vertices}
+import graft.operators.{Betweenness, GraphOps, Vertices}
 
 class GraphOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -13,6 +13,10 @@ class GraphOpsSpec extends AnyFunSuite {
   // diamond DAG: 1→2, 1→3, 2→4, 3→4, 4→5
   private lazy val diamond =
     Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+
+  /** The operators read edges as given: the undirected graph of `edges`. */
+  private def undirected(edges: DataFrame): DataFrame =
+    GraphOps.undirectedAdjacency(edges)
 
   test("bfsDepths: minimum depth per node") {
     val d = GraphOps.bfsDepths(diamond, Seq(1L).toDF("id"))
@@ -32,7 +36,7 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("shortestPath length: undirected hops; -1 when disconnected") {
     def hops(edges: DataFrame, a: Long, b: Long): Int =
-      GraphOps.shortestPath(edges, a, b).size - 1
+      GraphOps.shortestPath(undirected(edges), a, b).size - 1
     assert(hops(diamond, 5L, 1L) == 3)
     assert(hops(diamond, 2L, 3L) == 2)
     val twoIslands = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
@@ -40,30 +44,32 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("shortestPath reconstructs a valid minimal node sequence") {
-    val p = GraphOps.shortestPath(diamond, 1L, 5L)
+    val adj = undirected(diamond)
+    val p = GraphOps.shortestPath(adj, 1L, 5L)
     assert(p.length == 4) // 1 -> {2|3} -> 4 -> 5
     assert(p.head == 1L && p.last == 5L)
     assert(p(2) == 4L && (p(1) == 2L || p(1) == 3L))
     // deterministic across runs (min-parent tiebreak)
-    assert(GraphOps.shortestPath(diamond, 1L, 5L) == p)
-    assert(GraphOps.shortestPath(diamond, 1L, 1L) == Seq(1L))
+    assert(GraphOps.shortestPath(adj, 1L, 5L) == p)
+    assert(GraphOps.shortestPath(adj, 1L, 1L) == Seq(1L))
     val twoIslands = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
-    assert(GraphOps.shortestPath(twoIslands, 1L, 4L).isEmpty)
+    assert(GraphOps.shortestPath(undirected(twoIslands), 1L, 4L).isEmpty)
   }
 
   test("shortestPathFrame: (step, id) rows mirror shortestPath; empty when unreachable") {
-    val seq = GraphOps.shortestPath(diamond, 1L, 5L)
-    val frame = GraphOps.shortestPathFrame(diamond, 1L, 5L)
+    val adj = undirected(diamond)
+    val seq = GraphOps.shortestPath(adj, 1L, 5L)
+    val frame = GraphOps.shortestPathFrame(adj, 1L, 5L)
       .orderBy(col("step")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))
     assert(frame.toSeq == seq.zipWithIndex.map { case (id, i) => (i, id) })
     // min-parent tiebreak picks node 2 over 3 on the diamond
     assert(frame(1) == (1, 2L))
     val twoIslands = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
-    assert(GraphOps.shortestPathFrame(twoIslands, 1L, 4L).count() == 0L)
+    assert(GraphOps.shortestPathFrame(undirected(twoIslands), 1L, 4L).count() == 0L)
     // a maxDepth cap short of the target yields the same empty frame the
     // oracle's capped unrolling produces
-    assert(GraphOps.shortestPathFrame(diamond, 1L, 5L, maxDepth = 2).count() == 0L)
+    assert(GraphOps.shortestPathFrame(adj, 1L, 5L, maxDepth = 2).count() == 0L)
   }
 
   test("triangles: compact-forward enumeration equals brute force (3 seeds)") {
@@ -127,16 +133,17 @@ class GraphOpsSpec extends AnyFunSuite {
     // fall below 3 in round one; 4 keeps degree 3 inside the clique)
     val g = ((for { i <- 1L to 4L; j <- 1L to 4L if i < j } yield (i, j)) ++
       Seq((4L, 5L), (5L, 6L))).toDF("src", "dst")
-    val core = GraphOps.kCorePeel(g, k = 3, rounds = 10).collect()
+    val adj = undirected(g)
+    val core = GraphOps.kCorePeel(adj, k = 3, rounds = 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
     // bounded rounds: after ONE round only vertex 6 (degree 1) is gone;
     // 5 survives with in-core degree 1 — the documented mid-peel state
-    val one = GraphOps.kCorePeel(g, k = 2, rounds = 1).collect()
+    val one = GraphOps.kCorePeel(adj, k = 2, rounds = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 4L, 5L -> 1L))
     // a too-high k empties the graph
-    assert(GraphOps.kCorePeel(g, k = 10, rounds = 3).count() == 0L)
+    assert(GraphOps.kCorePeel(adj, k = 10, rounds = 3).count() == 0L)
     // random graphs: generous rounds reach the fixpoint, which must
     // equal a driver-side run-to-fixpoint peel (2 seeds, k = 2 and 3)
     for (seed <- Seq(31, 32); kk <- Seq(2, 3)) {
@@ -160,7 +167,7 @@ class GraphOpsSpec extends AnyFunSuite {
       val expected = canon.filter { case (a, b) => nodes(a) && nodes(b) }
         .flatMap { case (a, b) => Seq(a, b) }
         .groupBy(identity).map { case (x, xs) => x -> xs.size.toLong }
-      val got = GraphOps.kCorePeel(es.toDF("src", "dst"), kk, rounds = 30)
+      val got = GraphOps.kCorePeel(undirected(es.toDF("src", "dst")), kk, rounds = 30)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed $seed k=$kk")
     }
@@ -400,6 +407,29 @@ class GraphOpsSpec extends AnyFunSuite {
           "pageRank", "labelPropagation", "CC driver", "CC star").zipWithIndex)
         assert(rs(i) == want(i), s"seed=$seed $name at $setting differs from $base")
     }
+    // the traversals over one seeded graph's adjacency, read as given
+    def anyRows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    val rnd = new scala.util.Random(19)
+    val es = (0L until 19L).map(i => (i, i + 1)) ++
+      (1 to 50).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val adj = undirected(es.toDF("src", "dst"))
+    val roots = Seq(0L, 7L, 40L).toDF("root")
+    val got = settings.map { case (parts, aqe) =>
+      withConf("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString) {
+        (parts, aqe) -> Seq(
+          GraphOps.shortestPath(adj, 0L, 19L).map(_.toString),
+          anyRows(GraphOps.kCorePeel(adj, k = 2, rounds = 3)),
+          anyRows(GraphOps.linkPrediction(adj, maxNeighbors = 4)),
+          anyRows(Betweenness.forwardCounts(adj, roots, maxDepth = 6)))
+      }
+    }
+    val (base, want) = got.head
+    assert(want.forall(_.nonEmpty), s"empty result at $base")
+    for ((setting, rs) <- got.tail; (name, i) <- Seq(
+        "shortestPath", "kCorePeel", "linkPrediction", "forwardCounts").zipWithIndex)
+      assert(rs(i) == want(i), s"$name at $setting differs from $base")
   }
 
   test("labelPropagation returns a label per vertex") {
@@ -431,7 +461,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // square 1-2-3-4-1: the two diagonals each have 2 common neighbors
     // of degree 2 (log2 2 = 1 -> aa term exactly 1e6 each)
     val square = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
-    val got = graft.operators.GraphOps.linkPrediction(square)
+    val got = graft.operators.GraphOps.linkPrediction(undirected(square))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
@@ -441,7 +471,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // star 0-{1..5} with cap 3: only the 3 smallest leaves pair up
     // (3 pairs), but each Adamic-Adar term uses the FULL degree 5
     val star = (1L to 5L).map(l => (0L, l)).toDF("src", "dst")
-    val capped = graft.operators.GraphOps.linkPrediction(star, maxNeighbors = 3)
+    val capped = graft.operators.GraphOps.linkPrediction(undirected(star), maxNeighbors = 3)
       .orderBy(col("node_a"), col("node_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val term = math.round(1000000.0 / (math.log(5.0) / math.log(2.0)))
@@ -449,22 +479,25 @@ class GraphOpsSpec extends AnyFunSuite {
       (1L, 2L, 1L, term), (1L, 3L, 1L, term), (2L, 3L, 1L, term)))
   }
 
-  test("linkPrediction: prepared adjacency is plan reuse, not a semantics fork") {
+  test("linkPrediction: a multigraph's undirectedAdjacency equals its simple graph") {
     import org.apache.spark.sql.functions.col
     // pseudo-random multigraph with dup/reversed edges and self-loops —
-    // exactly what undirectedAdjacency must collapse either way
-    val edges = (1 to 400).map { i =>
+    // exactly what undirectedAdjacency must collapse
+    val pairs = (1 to 400).map { i =>
       val a = (i * 2654435761L) % 37
       val b = (i * 40503L + 7) % 37
       (a, b)
-    }.toDF("src", "dst")
-    val cold = graft.operators.GraphOps.linkPrediction(edges, maxNeighbors = 5)
+    }
+    // the same graph collapsed on the driver: both directions of every
+    // distinct non-loop edge
+    val simple = pairs.collect { case (a, b) if a != b =>
+      (math.min(a, b), math.max(a, b)) }.distinct
+    def predicted(adj: DataFrame) = graft.operators.GraphOps
+      .linkPrediction(adj, maxNeighbors = 5)
       .orderBy(col("node_a"), col("node_b")).collect().toSeq
-    val adj = graft.operators.GraphOps.undirectedAdjacency(edges)
-    val warm = graft.operators.GraphOps
-      .linkPrediction(adj, maxNeighbors = 5, adjPrepared = true)
-      .orderBy(col("node_a"), col("node_b")).collect().toSeq
-    assert(cold.nonEmpty && cold == warm)
+    val viaMultigraph = predicted(undirected(pairs.toDF("src", "dst")))
+    val viaSimple = predicted((simple ++ simple.map(_.swap)).toDF("src", "dst"))
+    assert(viaMultigraph.nonEmpty && viaMultigraph == viaSimple)
   }
 
   test("linkPrediction: two-level salted cap equals the naive smallest-k cap") {
@@ -479,7 +512,7 @@ class GraphOpsSpec extends AnyFunSuite {
     }
     val edges = (hub ++ chaff).toDF("src", "dst")
     val k = 4
-    val got = graft.operators.GraphOps.linkPrediction(edges, maxNeighbors = k)
+    val got = graft.operators.GraphOps.linkPrediction(undirected(edges), maxNeighbors = k)
       .orderBy(col("node_a"), col("node_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     // naive reference: smallest-k neighbor lists per center via plain

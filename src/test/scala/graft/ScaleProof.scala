@@ -787,9 +787,11 @@ object ScaleProof {
         // link prediction over the near-dup candidate pair graph: the
         // capped wedge self-join moves only (id, id) pairs and degrees
         graft.operators.GraphOps.linkPrediction(
-          Dedup.minhashCandidates(docs, "doc_id", "text",
-            numHashes = 64, bands = 16, nGram = 3)
-            .select(col("id_a").as("src"), col("id_b").as("dst")),
+          graft.operators.GraphOps.undirectedAdjacency(
+            Dedup.minhashCandidates(docs, "doc_id", "text",
+              numHashes = 64, bands = 16, nGram = 3)
+              .select(col("id_a").as("src"), col("id_b").as("dst")))
+            .localCheckpoint(),
           maxNeighbors = 64)
           .agg(coalesce(sum(col("common_neighbors")), lit(0L)))
           .head().getLong(0))
@@ -804,7 +806,8 @@ object ScaleProof {
           .orderBy(col("root")).limit(8)
         graft.operators.Betweenness.closenessFromForward(
           graft.operators.Betweenness.forwardCounts(
-            edges, roots, maxDepth = 4))
+            graft.operators.GraphOps.undirectedAdjacency(edges).localCheckpoint(),
+            roots, maxDepth = 4))
           .agg(coalesce(sum(col("harmonic_micro")), lit(0L)))
           .head().getLong(0)
       }
