@@ -57,6 +57,7 @@ object GraftFunctions {
     "asof_index" -> ((es: Seq[Expression]) => AsofIndex(es(0), es(1))),
     "dot_q8" -> ((es: Seq[Expression]) => DotProductQ8(es(0), es(1))),
     "nfc_normalize" -> ((es: Seq[Expression]) => NfcNormalize(es(0))),
+    "lower_icu" -> ((es: Seq[Expression]) => LowerIcu(es(0))),
     "url_domain" -> ((es: Seq[Expression]) => UrlDomainExpr(es(0))),
     "canonicalize_url" -> ((es: Seq[Expression]) => CanonicalizeUrlExpr(es(0))),
     "lsh_buckets" ->
@@ -134,6 +135,10 @@ object GraftFunctions {
 
   /** Unicode NFC normalization of a string column (DuckDB-parity). */
   def nfcNormalize(s: Column): Column = call_function("nfc_normalize", s)
+
+  /** `lower` of a string column without Spark's one-time collation table
+    * build (see [[graft.functions.LowerIcu]]); same result bytes. */
+  def lowerIcu(s: Column): Column = call_function("lower_icu", s)
 
   /** All signed-random-projection LSH buckets of an array<float> vector →
     * array<struct<band:int, bucket:long>>, one entry per plane table. */

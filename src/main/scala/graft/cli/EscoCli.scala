@@ -65,17 +65,18 @@ object EscoCli {
             rm(dir)
           }
         }
-        EscoWarehouse.save(wh, whDir)
+        // the summary comes from the rows the save wave observed: no job
+        // runs after it (re-counting would re-derive every edge table)
+        val rows = EscoWarehouse.save(wh, whDir)
         // reference ingest ends with embedding generation
         // (src/esco_ingest.py:410-412); one columnar pass here
         if (opts.contains("embed"))
           new SemanticSearch(wh, new HashingEmbedder()).persistIndex(whDir)
-        val counts = Seq(
-          "skills" -> wh.skills.count(),
-          "occupations" -> wh.occupations.count(),
-          "iscoGroups" -> wh.iscoGroups.count(),
-          "edges" -> wh.allEdges.count())
-        counts.foreach { case (k, v) => println(f"$k%-12s $v") }
+        val nodes = Seq("skills" -> rows("skills"),
+          "occupations" -> rows("occupations"),
+          "iscoGroups" -> rows("isco_groups"))
+        (nodes :+ ("edges" -> (rows.values.sum - nodes.map(_._2).sum)))
+          .foreach { case (k, v) => println(f"$k%-12s $v") }
       }
 
     case "search" :: whDir :: query :: rest =>

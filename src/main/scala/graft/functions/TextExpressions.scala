@@ -35,6 +35,35 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Lower-casing of a string column, byte-identical to Spark's `lower`
+  * (its default ICU case mappings): ASCII text takes the ASCII fast
+  * path, any other text ICU's root-locale `UCharacter.toLowerCase` — the
+  * same two branches Spark's `lower` runs. It differs in one cost only:
+  * Spark's branch lives in `CollationAwareUTF8String`, whose static
+  * initializer builds a title-case table over all 1.1M code points
+  * (~0.8 s on one core) the first time the JVM lowers any row, and
+  * every other task of that stage blocks on the class initialization.
+  * In a fresh JVM that stalls the first text pass — curation's tokens —
+  * by the whole table build; this expression never loads that class.
+  */
+case class LowerIcu(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.strings(prettyName, child.dataType)
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "lower_icu"
+
+  override def nullSafeEval(a: Any): Any =
+    TextOps.lower(a.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.TextOps.lower($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Token n-gram ("shingle") strings over an `array<string>` of tokens:
   * windows of `n` consecutive tokens joined by single spaces — output
   * `array<string>` of length `max(0, tokens - n + 1)`. Byte-identical to
@@ -112,6 +141,10 @@ case class TokenNgrams(child: Expression, n: Int)
 
 /** Static helpers callable from generated code. */
 object TextOps {
+  def lower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString))
+
   def nfc(s: UTF8String): UTF8String = {
     val str = s.toString
     // fast path: Normalizer.isNormalized is a cheap scan; ASCII and most

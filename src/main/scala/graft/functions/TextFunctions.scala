@@ -13,8 +13,12 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokens of lower-cased, trimmed text. */
-  def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
+  /** Whitespace tokens of lower-cased, trimmed text. Lower-cased by
+    * [[graft.GraftFunctions.lowerIcu]] (same bytes as `lower`), so the
+    * first tokenization in a JVM does not wait on Spark's collation
+    * table build. */
+  def tokens(text: Column): Column =
+    split(trim(graft.GraftFunctions.lowerIcu(text)), "\\s+")
 
   /** Overlapping word n-grams of [[tokens]] as space-joined strings —
     * `array<string>` of length `size(tokens) - n + 1` (empty below n

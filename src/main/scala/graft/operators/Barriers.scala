@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialization barriers for pipeline frames.
   *
@@ -18,15 +19,15 @@ import org.apache.spark.sql.DataFrame
   * session conf: set `spark.graft.checkpointDir` to a reliable
   * (HDFS/object-store) location and every barrier staged through this
   * object — [[stage]], [[stageAll]] and [[stageAsync]], called by the
-  * SparkEntry funnel lanes, `Incremental`, `CorpusStats`, `Dedup` and
-  * `Sampling` — becomes a reliable `Dataset.checkpoint` to that
-  * directory instead: same call sites, same eager semantics, survivable
-  * executors. The conf is read per call, so one session can flip modes
-  * between pipelines. Code that calls `localCheckpoint`/`checkpoint`
-  * directly does NOT read the conf and stays executor-local: among
-  * others the iterative graph operators (`GraphOps`, `Louvain`,
-  * `Betweenness`), the warehouse session in `EscoAnalytics` and
-  * `SemanticSearch`'s embedded corpora.
+  * SparkEntry funnel lanes, `Incremental`, `CorpusStats`, `Dedup`,
+  * `Sampling` and `EscoWarehouse.build` — becomes a reliable
+  * `Dataset.checkpoint` to that directory instead: same call sites, same
+  * eager semantics, survivable executors. The conf is read per call, so
+  * one session can flip modes between pipelines. Code that calls
+  * `localCheckpoint`/`checkpoint` directly does NOT read the conf and
+  * stays executor-local: among others the iterative graph operators
+  * (`GraphOps`, `Louvain`, `Betweenness`), the warehouse session in
+  * `EscoAnalytics` and `SemanticSearch`'s embedded corpora.
   *
   * Operational constraints of the reliable path:
   *
@@ -141,17 +142,47 @@ object Barriers {
     * rule, applied to a single frame). */
   final class Async private[Barriers] (
       fut: java.util.concurrent.Future[DataFrame],
-      sc: org.apache.spark.SparkContext,
-      groupId: String) {
+      sc: SparkContext,
+      tag: String) {
     def await(): DataFrame =
       try fut.get()
       catch {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     def cancel(): Unit = {
-      sc.cancelJobGroup(groupId)
+      sc.cancelJobsWithTag(tag)
       fut.cancel(true)
     }
+  }
+
+  // A wave's threads: named after the wave's tag (so a thread dump, or a
+  // test, can tell them apart) and daemon (a stuck barrier never holds
+  // the JVM open). A thread inherits the local properties of the thread
+  // that creates it — the caller, since the pool creates its threads on
+  // submit — so the wave's jobs keep the caller's job group, tags and
+  // span properties: cancelling the caller's group reaches them.
+  private def newPool(tag: String, width: Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    java.util.concurrent.Executors.newFixedThreadPool(width,
+      (r: Runnable) => {
+        val t = new Thread(r, s"$tag-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+
+  private def newTag(kind: String): String =
+    s"graft-$kind-" + java.util.UUID.randomUUID().toString.take(8)
+
+  // Run `f` on a wave thread: ADD the wave's tag to the inherited ones
+  // (setJobGroup would replace the caller's group, and the caller's
+  // cancel would then miss the wave) and describe the job for the UI.
+  private def tagged[T](sc: SparkContext, tag: String, desc: String)(
+      f: => T): T = {
+    sc.addJobTag(tag)
+    sc.setInterruptOnCancel(true)
+    sc.setJobDescription(desc)
+    f
   }
 
   /** Begin materializing ONE frame's barrier on a background thread so
@@ -162,18 +193,50 @@ object Barriers {
     * staged frame, [[Async.cancel]] if your own work fails first. */
   def stageAsync(df: DataFrame): Async = {
     val sc = df.sparkSession.sparkContext
-    val groupId = "graft-stageAsync-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val tag = newTag("stageAsync")
+    val pool = newPool(tag, 1)
     val fut = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-      override def call(): DataFrame = {
-        sc.setJobGroup(groupId, "graft: stageAsync barrier",
-          interruptOnCancel = true)
-        try materialize(df) finally sc.clearJobGroup()
-      }
+      override def call(): DataFrame =
+        tagged(sc, tag, "graft: stageAsync barrier")(materialize(df))
     })
     pool.shutdown() // the submitted task still runs; no new work accepted
-    new Async(fut, sc, groupId)
+    new Async(fut, sc, tag)
+  }
+
+  // One concurrent wave: `body(i)` for every i < n on a pool of at most
+  // 4 threads (2-3 concurrent jobs already fill the stragglers' tails,
+  // guide §2.6 — "not so many that they fight for executors"). Results
+  // are awaited in COMPLETION order, so the first failure is seen at
+  // once, not after the siblings submitted before it finish: it cancels
+  // the wave's running jobs by the wave's tag, stops the pool and is
+  // rethrown unwrapped. The caller's own group and tags stay on every
+  // job (see [[newPool]]).
+  private def wave[T](sc: SparkContext, kind: String, n: Int)(
+      body: Int => T): Seq[T] = {
+    val tag = newTag(kind)
+    val pool = newPool(tag, math.min(n, 4))
+    try {
+      val done = new java.util.concurrent.ExecutorCompletionService[T](pool)
+      val futures = (0 until n).map { i =>
+        done.submit(new java.util.concurrent.Callable[T] {
+          override def call(): T =
+            tagged(sc, tag, s"graft: $kind ${i + 1}/$n")(body(i))
+        })
+      }
+      try {
+        for (_ <- 0 until n) done.take().get()
+        futures.map(_.get())
+      } catch {
+        case e: Throwable =>
+          sc.cancelJobsWithTag(tag)
+          pool.shutdownNow()
+          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+          throw (e match {
+            case x: java.util.concurrent.ExecutionException => x.getCause
+            case x => x
+          })
+      }
+    } finally pool.shutdown()
   }
 
   /** Materialize several MUTUALLY INDEPENDENT frames' barriers
@@ -184,94 +247,34 @@ object Barriers {
     * independent prior-state frames of a maintenance lane can
     * materialize together and back-fill each other's stragglers.
     *
-    * Implementation: one bounded thread pool runs each frame's FULL
-    * materialization ([[materialize]] — conversion AND count, because
-    * under AQE the conversion itself runs every intermediate stage), so
-    * after the call returns, all frames read from their materialized
-    * blocks exactly as if staged eagerly in sequence. Caller contract:
+    * Each frame's FULL materialization ([[materialize]] — conversion AND
+    * count, because under AQE the conversion itself runs every
+    * intermediate stage) runs on the wave's pool, so after the call
+    * returns, all frames read from their materialized blocks exactly as
+    * if staged eagerly in sequence. Every job keeps the caller's job
+    * group and adds the wave's tag: cancelling the caller's group stops
+    * the wave, and a failed frame cancels its siblings. Caller contract:
     * the frames must not depend on one another's barrier (a dependent
-    * frame would just recompute its parent inside its own job —
-    * correct, but the parent's work runs twice). */
-  def stageAll(dfs: DataFrame*): Seq[DataFrame] = {
-    if (dfs.size <= 1) return dfs.map(stage(_))
-    // pool of 4, not one-per-frame: 2-3 concurrent jobs already fill the
-    // stragglers' tails (guide §2.6 — "not so many that they fight for
-    // executors"); beyond that, extra jobs just contend for the same
-    // cores. The WHOLE materialization — lazy-barrier conversion
-    // included, see [[materialize]] — runs on the pool threads under one
-    // shared job GROUP (guide §1.5) so (a) the jobs are attributable in
-    // a cluster UI and (b) a failed sibling can cancel the rest instead
-    // of leaving them burning the cluster after the caller already
-    // failed.
-    val sc = dfs.head.sparkSession.sparkContext
-    val groupId = "graft-stageAll-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(dfs.size, 4))
-    try {
-      val futures = dfs.zipWithIndex.map { case (df, i) =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            sc.setJobGroup(groupId,
-              s"graft: stageAll barrier ${i + 1}/${dfs.size}",
-              interruptOnCancel = true)
-            try materialize(df) finally sc.clearJobGroup()
-          }
-        })
-      }
-      try futures.map(_.get())
-      catch {
-        case e: Throwable =>
-          // a sibling materialization is already doomed work: cancel the
-          // group's running jobs and stop the pool before rethrowing
-          sc.cancelJobGroup(groupId)
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          throw e
-      }
-    } finally pool.shutdown()
-  }
+    * frame would just recompute its parent inside its own job — correct,
+    * but the parent's work runs twice). */
+  def stageAll(dfs: DataFrame*): Seq[DataFrame] =
+    if (dfs.size <= 1) dfs.map(stage(_))
+    else wave(dfs.head.sparkSession.sparkContext, "stageAll", dfs.size)(
+      i => materialize(dfs(i)))
 
-  /** CONSTRUCT several mutually independent frames concurrently. Unlike
+  /** Run several mutually independent thunks concurrently. Unlike
     * [[stageAll]] (which materializes frames the caller already built),
-    * this runs the construction THUNKS themselves on the pool — for
-    * builders whose construction triggers internal eager barriers (an
-    * operator that stages a multi-consumer frame mid-build, e.g. the
-    * datasheet chain's signature stage): issued sequentially, each
-    * builder's barrier jobs idle the cluster through their own tails
-    * (guide §2.6). Nothing forces the returned frames' final plans —
-    * only their internal barriers have run. Same pool-width and
-    * cancel-on-sibling-failure rules as [[stageAll]]; a thunk's own
-    * [[stage]]/[[stageAll]] calls re-label their jobs inside, so the
-    * outer group covers only jobs the thunk runs outside those. */
-  def buildAll(
-      spark: org.apache.spark.sql.SparkSession)(
-      thunks: (() => DataFrame)*): Seq[DataFrame] = {
-    if (thunks.size <= 1) return thunks.map(_())
-    val sc = spark.sparkContext
-    val groupId = "graft-buildAll-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(thunks.size, 4))
-    try {
-      val futures = thunks.zipWithIndex.map { case (thunk, i) =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = {
-            sc.setJobGroup(groupId,
-              s"graft: buildAll ${i + 1}/${thunks.size}",
-              interruptOnCancel = true)
-            try thunk() finally sc.clearJobGroup()
-          }
-        })
-      }
-      try futures.map(_.get())
-      catch {
-        case e: Throwable =>
-          sc.cancelJobGroup(groupId)
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          throw e
-      }
-    } finally pool.shutdown()
-  }
+    * this runs the thunks themselves on the pool — for builders whose
+    * construction triggers internal eager barriers (an operator that
+    * stages a multi-consumer frame mid-build, e.g. the datasheet chain's
+    * signature stage), and for independent actions such as the table
+    * writes of `EscoWarehouse.save`: issued sequentially, each one's jobs
+    * idle the cluster through their own tails (guide §2.6). Nothing
+    * forces a returned frame's final plan — only what the thunk ran has
+    * run. Same pool width, job group, tag and cancel-on-sibling-failure
+    * rules as [[stageAll]]; a thunk's own [[stage]]/[[stageAll]] calls
+    * re-describe their jobs inside. */
+  def buildAll[T](spark: SparkSession)(thunks: (() => T)*): Seq[T] =
+    if (thunks.size <= 1) thunks.map(_())
+    else wave(spark.sparkContext, "buildAll", thunks.size)(i => thunks(i)())
 }

@@ -41,6 +41,18 @@ object Curation {
         * hashing). */
       portableSig: Boolean = false)
 
+  /** The text pass's input, spread over the cores: hash-repartitioned
+    * on `idCol` into `defaultParallelism` partitions, one shuffle of the
+    * id and text columns. A corpus stored as a few large Parquet row
+    * groups otherwise runs the whole text pass — tokens, quality,
+    * language, md5, MinHash — as that many tasks, on that many cores.
+    * The input's own partition count is not read: on a plan with an
+    * exchange that would run its stages first. Keeper and cluster rules
+    * are min-id, so the partitioning never changes the rows. */
+  private def spread(docs: DataFrame, idCol: String): DataFrame =
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism,
+      col(idCol))
+
   /** Full pipeline. Returns the surviving documents with annotations and
     * a `drop_reason` view of what was removed (for pipeline observability
     * — silent filtering is how corpora rot).
@@ -52,7 +64,8 @@ object Curation {
     * Near-dup drops are TRANSITIVE: candidate pairs → connected-component
     * clusters → keep each cluster's min id ([[Dedup.nearDupClusters]]) —
     * pairwise dropping keeps {1,3} of a {1~5, 3~5} chain where the cluster
-    * policy keeps only {1}.
+    * policy keeps only {1}. That text pass runs on every core, whatever
+    * the input's partitioning (see [[spread]]).
     *
     * Precondition: `idCol` unique and non-null (the keeper ranking and the
     * final id-keyed payload rejoin both depend on it; NULL ids would
@@ -85,7 +98,7 @@ object Curation {
     // the session then pays a sameResult scan against it; the checkpoint
     // cuts lineage instead of cache-matching. On a cluster swap for
     // `checkpoint(false)` to reliable storage.
-    val ranked = source
+    val ranked = spread(source, idCol)
       .select(
         col(idCol),
         tokenCount(col(textCol)).as("n_tokens"),

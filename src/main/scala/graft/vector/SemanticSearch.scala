@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftFunctions
 import graft.functions.VectorOps
+import graft.operators.Barriers
 import graft.sources.EscoWarehouse
 
 /** Pluggable text embedder (SURVEY M1/M2).
@@ -207,10 +208,15 @@ class SemanticSearch(wh: EscoWarehouse, embedder: TextEmbedder) {
 
   /** Materialize the embedding columns to Parquet (S5 write-back as a
     * columnar rewrite — the reference does 2 Bolt round-trips per node,
-    * `src/esco_ingest.py:350-386`; here it is one pass per table). */
+    * `src/esco_ingest.py:350-386`; here it is one pass per table). The
+    * two writes are independent, so they run as one concurrent
+    * [[Barriers.buildAll]] wave. */
   def persistIndex(dir: String): Unit = {
-    skillsIndexed.write.mode("overwrite").parquet(s"$dir/skills_indexed")
-    occupationsIndexed.write.mode("overwrite").parquet(s"$dir/occupations_indexed")
+    val writes = Seq(skillsIndexed -> "skills_indexed",
+      occupationsIndexed -> "occupations_indexed")
+    Barriers.buildAll(wh.skills.sparkSession)(writes.map { case (df, n) =>
+      () => df.write.mode("overwrite").parquet(s"$dir/$n")
+    }: _*)
   }
 
   /** `is_data_indexed` semi-join probe (reference `src/semantic_search.py:14-37`). */

@@ -72,4 +72,76 @@ class BarriersSpec extends AnyFunSuite {
         .filter(Files.isRegularFile(_)).count() > 0)
     } finally session.conf.unset(Barriers.CheckpointDirKey)
   }
+
+  // -- wave failure paths: a wave's jobs carry the caller's job group
+  // plus the wave's own tag
+
+  // a frame whose every row sleeps `ms` (or throws when `ms` < 0): each
+  // task runs until the wave cancels it
+  private def rowsThat(ms: Long, parts: Int = 2) = {
+    val f = udf { (x: Long) =>
+      if (ms < 0) throw new IllegalStateException("sibling fails")
+      Thread.sleep(ms); x
+    }.asNondeterministic()
+    spark.range(0, parts, 1, parts).select(f(col("id")).as("id"))
+  }
+
+  private def waveThreads(): Int =
+    Thread.getAllStackTraces.keySet.toArray.count(t =>
+      t.asInstanceOf[Thread].getName.startsWith("graft-stageAll-"))
+
+  // nothing of the wave left: no active job, no live pool thread
+  private def assertWaveGone(threadsBefore: Int): Unit = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 20e9.toLong
+    while ((sc.statusTracker.getActiveJobIds().nonEmpty ||
+        waveThreads() > threadsBefore) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "a wave job still runs")
+    assert(waveThreads() == threadsBefore, "a wave thread is still alive")
+  }
+
+  test("stageAll: a failing sibling cancels the rest of the wave") {
+    val before = waveThreads()
+    val t0 = System.nanoTime()
+    // the slow frame is submitted FIRST: the failure must not wait for it
+    val e = intercept[Exception](
+      Barriers.stageAll(rowsThat(60000L), rowsThat(-1L)))
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30.0, f"wave took $secs%.1f s: the slow sibling was not cancelled")
+    assert(e.getMessage.contains("sibling fails") ||
+      Option(e.getCause).exists(_.toString.contains("sibling fails")), e.toString)
+    assertWaveGone(before)
+  }
+
+  test("stageAll: cancelling the caller's job group stops the running wave") {
+    val sc = spark.sparkContext
+    val before = waveThreads()
+    val group = "barriers-spec-caller"
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val caller = new Thread(() => {
+      sc.setJobGroup(group, "caller of a stageAll wave", interruptOnCancel = true)
+      try Barriers.stageAll(rowsThat(60000L), rowsThat(60000L))
+      catch { case t: Throwable => outcome.set(t) }
+      finally sc.clearJobGroup()
+    })
+    caller.start()
+    // wait until both of the wave's jobs run under the caller's group
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup(group).count(id =>
+        sc.statusTracker.getJobInfo(id).exists(
+          _.status == org.apache.spark.JobExecutionStatus.RUNNING)) < 2 &&
+        System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup(group).length >= 2,
+      "the wave's jobs do not carry the caller's group")
+    val t0 = System.nanoTime()
+    sc.cancelJobGroup(group)
+    caller.join(30000L)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(!caller.isAlive, "stageAll still runs after its caller's group was cancelled")
+    assert(secs < 30.0)
+    assert(outcome.get != null, "a cancelled wave returned normally")
+    assertWaveGone(before)
+  }
 }

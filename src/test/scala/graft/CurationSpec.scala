@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Curation, Joins}
+import graft.operators.{Barriers, Curation, Joins}
 
 class CurationSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -143,5 +143,48 @@ class CurationSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("inner/left"), jt)
     }
+  }
+
+  // -- the text pass's spread: same rows at any input partitioning
+
+  private lazy val corpus = GeneratedInputs.corpus(2000)
+
+  test("curate: identical curated and dropped rows over 1, 3 and 8 input partitions") {
+    def run(parts: Int) = {
+      val in = Barriers.stage(corpus.repartition(parts))
+      assert(in.rdd.getNumPartitions == parts)
+      val (curated, dropped) = Curation.curate(in, "doc_id", "text")
+      (curated.collect().toSet, dropped.collect().toSet)
+    }
+    val one = run(1)
+    assert(one._2.map(_.getString(1)).contains("exact_duplicate"))
+    assert(one._2.map(_.getString(1)).contains("near_duplicate"))
+    assert(one._1.size + one._2.size == 2000)
+    assert(run(3) == one)
+    assert(run(8) == one)
+  }
+
+  test("curate: a one-partition input's text pass runs defaultParallelism tasks") {
+    val in = Barriers.stage(corpus.repartition(1))
+    val n = in.count()
+    val (_, ev) = SparkEvents.record(spark)(Curation.curate(in, "doc_id", "text"))
+    // the text pass reads every document from the spread's shuffle and
+    // writes every document's stats to the keeper ranking's shuffle
+    val textPass = ev.stages.filter(s =>
+      s.taskMetrics.shuffleReadMetrics.recordsRead == n &&
+        s.taskMetrics.shuffleWriteMetrics.recordsWritten == n)
+    assert(textPass.nonEmpty, ev.stages.map(s => (s.numTasks, s.name)))
+    assert(textPass.map(_.numTasks).toSet ==
+      Set(spark.sparkContext.defaultParallelism))
+  }
+
+  test("curate: an input with an exchange is not executed to count its partitions") {
+    val reads = spark.sparkContext.longAccumulator("curate input rows")
+    val mark = udf { (t: String) => reads.add(1L); t }.asNondeterministic()
+    // the counting projection runs below the exchange: any extra run of
+    // the input's shuffle stage reads every row again
+    val in = corpus.withColumn("text", mark(col("text"))).repartition(2)
+    Curation.curate(in, "doc_id", "text")
+    assert(reads.value == 2000L)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -80,6 +81,110 @@ class EscoWarehouseSpec extends AnyFunSuite {
     assert(loaded.occupations.count() == 3039L)
     assert(loaded.skills.count() == 640L)
   }
+
+  // -- twins of the six snapshot tests over generated CSVs (GeneratedEsco:
+  // perfbench/gen.py at scale 0.1, checked against its expected.json), so
+  // the ingest is tested wherever the snapshot is absent
+
+  private def gen = GeneratedInputs
+  private lazy val genWh = EscoWarehouse.build(spark, gen.escoDir)
+
+  private def rows(t: String): Long = gen.counts(t)
+
+  test("generated twin: node counts, Q1 groups flagged") {
+    assert(genWh.occupations.count() == rows("occupations"))
+    assert(genWh.iscoGroups.count() == rows("isco_groups"))
+    assert(genWh.skills.count() == rows("skills"))
+    assert(genWh.skills.filter(col("isSkillGroup")).count() == gen.skillGroups)
+  }
+
+  test("generated twin: edge counts + Q2/Q3/S4 semantics") {
+    val tables = Seq(
+      "broader_skill" -> genWh.broaderSkill, "broader_isco" -> genWh.broaderIsco,
+      "broader_occupation" -> genWh.broaderOccupation,
+      "part_of_isco_group" -> genWh.partOfIscoGroup,
+      "essential_for" -> genWh.essentialFor, "optional_for" -> genWh.optionalFor,
+      "related_skill" -> genWh.relatedSkill,
+      "part_of_skill_group" -> genWh.partOfSkillGroup)
+    for ((t, df) <- tables) assert(df.count() == rows(t), t)
+    assert(rows("broader_occupation") == 0L && rows("part_of_skill_group") == 0L)
+  }
+
+  test("generated twin: multiline CSV parsing, physical lines != records") {
+    val file = s"${gen.escoDir}/occupations_en.csv"
+    val occ = EscoCsv.read(spark, file, EscoCsv.occupationsSchema)
+    assert(occ.count() == rows("occupations"))
+    assert(Files.readAllLines(Paths.get(file)).size > rows("occupations") + 1)
+    assert(occ.filter(col("altLabels").contains("\n")).count() > 0L)
+  }
+
+  test("generated twin: allNodes dual labels; allEdges tags types") {
+    val labelCounts = genWh.allNodes.groupBy(col("labels")).count()
+      .collect().map(r => r.getSeq[String](0).mkString(":") -> r.getLong(1)).toMap
+    assert(labelCounts("Skill:SkillGroup") == gen.skillGroups)
+    assert(labelCounts("Skill") == rows("skills") - gen.skillGroups)
+    assert(labelCounts("Occupation") == rows("occupations"))
+    assert(labelCounts("ISCOGroup") == rows("isco_groups"))
+    val edgeCounts = genWh.allEdges.groupBy(col("relType")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(edgeCounts("BROADER_THAN") == rows("broader_skill") + rows("broader_isco"))
+    assert(edgeCounts("PART_OF_ISCOGROUP") == rows("part_of_isco_group"))
+    assert(edgeCounts("ESSENTIAL_FOR") == rows("essential_for"))
+    assert(edgeCounts("OPTIONAL_FOR") == rows("optional_for"))
+    assert(edgeCounts("RELATED_SKILL") == rows("related_skill"))
+  }
+
+  test("generated twin: ingest is idempotent, all 11 tables identical") {
+    val again = EscoWarehouse.build(spark, gen.escoDir)
+    for (((a, b), i) <- again.productIterator.zip(genWh.productIterator)
+        .zipWithIndex) {
+      val (x, y) = (a.asInstanceOf[DataFrame], b.asInstanceOf[DataFrame])
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, s"table $i")
+    }
+  }
+
+  test("generated twin: save/load round-trip, save reports rows written") {
+    val dir = Files.createTempDirectory("graft-gen-wh").toString
+    val written = EscoWarehouse.save(genWh, dir)
+    val loaded = EscoWarehouse.load(spark, dir)
+    for (t <- Seq("skills", "occupations", "isco_groups", "broader_skill",
+        "essential_for", "related_skill")) {
+      assert(written(t) == rows(t), t)
+      assert(spark.read.parquet(s"$dir/$t").count() == rows(t), t)
+    }
+    assert(written.size == 11)
+    assert(loaded.occupations.count() == rows("occupations"))
+  }
+
+  test("generated: without skills_en.csv only skill groups are skills (S4)") {
+    val d = Files.createTempDirectory("graft-gen-noskills")
+    Files.list(Paths.get(gen.escoDir)).forEach(f =>
+      if (f.getFileName.toString != "skills_en.csv")
+        Files.copy(f, d.resolve(f.getFileName)))
+    val w = EscoWarehouse.build(spark, d.toString)
+    assert(w.skills.count() == gen.skillGroups)
+    assert(w.skills.filter(!col("isSkillGroup")).isEmpty)
+    // every skill-anchored edge loses an endpoint; group -> group stays
+    assert(w.essentialFor.isEmpty && w.optionalFor.isEmpty && w.relatedSkill.isEmpty)
+    val groupPairs = EscoCsv.read(spark, s"$d/broaderRelationsSkillPillar_en.csv",
+        EscoCsv.broaderRelationsSchema)
+      .filter(col("conceptType") === "SkillGroup" && col("broaderType") === "SkillGroup")
+      .select("conceptUri", "broaderUri").distinct().count()
+    assert(groupPairs > 0L && w.broaderSkill.count() == groupPairs)
+    assert(w.occupations.count() == rows("occupations"))
+  }
+
+  test("parse once: no built table's optimized plan reads a CSV") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    for ((df, i) <- genWh.productIterator.map(_.asInstanceOf[DataFrame])
+        .zipWithIndex) {
+      val csvLeaves = df.queryExecution.optimizedPlan.collectLeaves().collect {
+        case l: LogicalRelation => l.relation
+      }.collect { case h: HadoopFsRelation if h.fileFormat.isInstanceOf[CSVFileFormat] => h }
+      assert(csvLeaves.isEmpty, s"table $i reads ${csvLeaves.map(_.location)}")
+    }
+  }
 }
 
 /** Mini-fixture suite for the two loaders whose files are absent. */
@@ -140,6 +245,17 @@ class EscoFixtureSpec extends AnyFunSuite {
   }
 
   private lazy val wh = EscoWarehouse.build(spark, dir)
+
+  test("a skill group sharing a skill's URI fails the build") {
+    val d = Files.createTempDirectory("esco-fix-collide")
+    Files.list(Paths.get(dir)).forEach(f => Files.copy(f, d.resolve(f.getFileName)))
+    Files.writeString(d.resolve("skillGroups_en.csv"),
+      """conceptType,conceptUri,preferredLabel,altLabels,hiddenLabels,status,modifiedDate,scopeNote,inScheme,description,code
+        |SkillGroup,uri:skill/1,data skills,,,released,,,scheme:x,Data group,G1
+        |""".stripMargin)
+    val e = intercept[IllegalStateException](EscoWarehouse.build(spark, d.toString))
+    assert(e.getMessage.contains("skills.conceptUri"))
+  }
 
   test("skills load + Q1 union: 3 skills + 1 group, flag set") {
     assert(wh.skills.count() == 4L)

@@ -49,6 +49,17 @@ class TextFunctionsSpec extends AnyFunSuite {
     df.collect().foreach(r => assert(r.getString(0) == r.getString(1), r.toString))
   }
 
+  test("lowerIcu gives the same bytes as Spark's lower, ASCII or not") {
+    val texts = Seq("Hello WORLD", "\u00c4RGER \u00fcber STRA\u00dfE",
+      "\u039f\u0394\u039f\u03a3 \u03a3", "\u0130stanbul", "\u01c5 \u01c8 \u1e9e", "", null)
+    val local = texts.toDF("text") // projected by the interpreter
+    for (df <- Seq(local, local.repartition(2))) { // ... and by codegen
+      val rows = df.select(lower(col("text")), lowerIcu(col("text"))).collect()
+      assert(rows.length == texts.size)
+      rows.foreach(r => assert(r.getString(0) == r.getString(1), r.toString))
+    }
+  }
+
   test("token n-grams") {
     val r = one("a b c d")
       .select(tokenNgrams(col("text"), 3).as("g")).head().getSeq[String](0)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, TestWarehouse}
+import graft.{GeneratedInputs, SparkEvents, SparkTestSession, TestWarehouse}
 import graft.analytics.EscoAnalytics
 import graft.sources.EscoWarehouse
 
@@ -159,6 +159,57 @@ class EscoCliSpec extends AnyFunSuite {
       .select("preferredLabel").head().getString(0)
     EscoCli.run(spark, List("analyze", dir, "viz-graph", occLabel))
     EscoCli.run(spark, List("analyze", dir, "combined-connections"))
+  }
+
+  // -- ingest, over CSVs generated at test time
+
+  private def printed(args: String*): String = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(EscoCli.run(spark, args.toList))
+    out.toString("UTF-8")
+  }
+
+  test("ingest --embed: tables, index and the printed counts match the generator") {
+    val gen = GeneratedInputs
+    val dir = Files.createTempDirectory("graft-cli-ingest").toString
+    val out = printed("ingest", gen.escoDir, dir, "--embed")
+    val shown = out.linesIterator.map(_.split("\\s+"))
+      .collect { case Array(k, v) => k -> v.toLong }.toMap
+    val edgeTables = Seq("broader_skill", "broader_isco", "broader_occupation",
+      "part_of_isco_group", "essential_for", "optional_for", "related_skill",
+      "part_of_skill_group")
+    assert(shown == Map("skills" -> gen.counts("skills"),
+      "occupations" -> gen.counts("occupations"),
+      "iscoGroups" -> gen.counts("isco_groups"),
+      "edges" -> edgeTables.map(gen.counts).sum), out)
+    for (t <- edgeTables :+ "skills" :+ "skills_indexed" :+ "occupations_indexed")
+      assert(spark.read.parquet(s"$dir/$t").count() == gen.counts(t), t)
+  }
+
+  test("ingest: no job runs after the save wave") {
+    val dir = Files.createTempDirectory("graft-cli-ingest-jobs").toString
+    val (_, ev) = SparkEvents.record(spark)(
+      printed("ingest", GeneratedInputs.escoDir, dir))
+    val jobs = ev.jobs
+    val firstSave = jobs.indexWhere(_._2.startsWith("graft: save "))
+    assert(firstSave >= 0, jobs)
+    val after = jobs.drop(firstSave).filterNot(_._2.startsWith("graft: save "))
+    assert(after.isEmpty, s"jobs after the save wave began: $after")
+  }
+
+  test("ingest --delete-all with a bad escoDir leaves the old warehouse intact") {
+    val dir = Files.createTempDirectory("graft-cli-keep").toString
+    EscoWarehouse.save(TestWarehouse.build(spark), dir)
+    def files() = {
+      val s = Files.walk(java.nio.file.Paths.get(dir))
+      try s.filter(Files.isRegularFile(_)).count() finally s.close()
+    }
+    val before = files()
+    val missing = Files.createTempDirectory("graft-cli-empty").toString + "/nope"
+    intercept[Exception](
+      EscoCli.run(spark, List("ingest", missing, dir, "--delete-all")))
+    assert(files() == before)
+    assert(EscoWarehouse.load(spark, dir).skills.count() == 5L)
   }
 
   test("kind-vocab-similarity: estimates stay in [0, 1] and pairs are ordered") {
